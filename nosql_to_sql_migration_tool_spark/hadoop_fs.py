@@ -134,24 +134,50 @@ def try_read_parquet(spark: SparkSession, path_str: str):
         return None
 
 
+def _inherit_caller_context(thunk):
+    """Wrap ``thunk`` so its jobs carry the CALLING thread's Spark local
+    properties (job group, description, scheduler pool) and session
+    tags. A pool thread starts with none of them, so without this its
+    jobs escape ``getJobIdsForGroup``/``cancelJobGroup`` and any
+    per-group profiling. Must run in the calling thread: the properties
+    are captured when wrapping, not when the thunk starts."""
+    from pyspark import SparkContext, inheritable_thread_target
+    from pyspark.sql import SparkSession
+
+    if SparkContext._active_spark_context is None:
+        return thunk
+    return inheritable_thread_target(SparkSession.active())(thunk)
+
+
 def run_concurrent(*thunks) -> None:
-    """Run independent store actions as concurrent Spark jobs
-    (optimization guide §2.6 "overlap independent jobs"): per-batch
-    store maintenance is dozens of small jobs whose stages rarely fill
-    the executor alone, so overlapping mutually-independent actions
-    (writes/sweeps of DIFFERENT paths) cuts driver-latency-bound wall
-    clock. Callers must only overlap actions with no cross-store
-    ordering requirement — every maintenance action in this repo is an
-    idempotent pure-function write, so a failed thunk re-runs exactly
-    like a crashed sequential step. Exceptions propagate after all
-    thunks settle (first failure re-raised)."""
+    """Run independent Spark actions as concurrent jobs (optimization
+    guide §2.6 "overlap independent jobs"): Spark's scheduler runs
+    several jobs at once inside one application — actions are only
+    sequential because the driver calls them sequentially. Small jobs
+    (tiny scans, store commits, driver round trips) rarely fill the
+    executor alone, so overlapping mutually-independent actions lets one
+    chain's tasks back-fill cores idled by another's stragglers and
+    driver-side waits; default FIFO scheduling gives the earlier thunk
+    priority.
+
+    Thunks must be mutually independent: writes/sweeps of DIFFERENT
+    paths with no cross-store ordering requirement, and any shared memo
+    already built (or built by exactly one thunk). Every such action in
+    this repo is an idempotent pure-function write, so a failed thunk
+    re-runs exactly like a crashed sequential step. Each thunk inherits
+    the caller's job group. Exceptions propagate after all thunks settle
+    (first failure re-raised)."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:
         thunks[0]()
         return
+    # One capture per thunk: each thread needs its own copy of the
+    # properties, because Spark mutates a thread's properties in place
+    # (e.g. the SQL execution id) while its actions run.
+    wrapped = [_inherit_caller_context(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
+        futures = [pool.submit(t) for t in wrapped]
         errs = []
         for f in futures:
             try:

@@ -24,20 +24,16 @@ from nosql_to_sql_migration_tool_spark.functions.normalize import (
 MISSING_ROW_FIELD = "_row"
 
 
-def compare_records(
+def _normalized_join(
     source: DataFrame,
     target: DataFrame,
     key: str,
-    cols: list[str] | None = None,
-) -> DataFrame:
-    """Per-field diff of source vs target rows after normalization.
-
-    Output: ``(key, field, source_value, target_value, status)`` with one
-    ``MISSING_IN_TARGET`` row per source row absent from the target
-    (field ``_row``; reference: "Document $id not found in SQL",
-    Migration_Validation.ps1:119-123) and one ``MISMATCH`` row per
-    normalized-unequal field (:301-315). Matching rows emit nothing.
-    """
+    cols: list[str] | None,
+) -> tuple[DataFrame, list[str]]:
+    """``source LEFT JOIN target`` on ``key`` with every compared field
+    normalized to the comparison canon: ``(key, __s_<c>..., __present,
+    __t_<c>...)``, where ``__present`` is NULL for a source row absent
+    from the target. Returns the joined frame and the compared fields."""
     if cols is None:
         cols = [c for c in source.columns if c != key and c in target.columns]
     src_types = {f.name: f.dataType for f in source.schema.fields}
@@ -58,7 +54,24 @@ def compare_records(
             for c in cols
         ],
     )
-    joined = src.join(tgt, key, "left")
+    return src.join(tgt, key, "left"), cols
+
+
+def compare_records(
+    source: DataFrame,
+    target: DataFrame,
+    key: str,
+    cols: list[str] | None = None,
+) -> DataFrame:
+    """Per-field diff of source vs target rows after normalization.
+
+    Output: ``(key, field, source_value, target_value, status)`` with one
+    ``MISSING_IN_TARGET`` row per source row absent from the target
+    (field ``_row``; reference: "Document $id not found in SQL",
+    Migration_Validation.ps1:119-123) and one ``MISMATCH`` row per
+    normalized-unequal field (:301-315). Matching rows emit nothing.
+    """
+    joined, cols = _normalized_join(source, target, key, cols)
 
     field_structs = F.array(
         *[
@@ -118,17 +131,38 @@ def validation_verdict(
     PARTIAL when passed > failed; else FAILED. ``issues`` counts the
     count-mismatch (1 if any) plus one per failed sample, mirroring the
     reference's Issues list length.
+
+    One pass: the ≤N sample left-joins the target once, one aggregate
+    counts the failing sample keys, and that row cross-joins the count
+    reconciliation. ``samples_validated`` is ``min(N, source_count)``,
+    the size of a last-N sample, so the join (which fans out when the
+    target repeats a key) is never counted for it.
     """
     sample = source.orderBy(F.col(key).desc()).limit(sample_size)
-    diffs = compare_records(sample, target, key, cols)
-    failed = diffs.select(key).distinct().agg(
-        F.count(F.lit(1)).alias("samples_failed")
+    joined, cols = _normalized_join(sample, target, key, cols)
+    # A sample row fails when it is absent from the target or any field
+    # pair compares unequal — exactly the rows ``compare_records`` emits
+    # for (a NULL comparison is not a mismatch, as in its filter).
+    # samples_failed counts DISTINCT failing keys; the struct wrapper
+    # keeps a NULL key countable.
+    failed_row = F.col("__present").isNull()
+    for c in cols:
+        failed_row = failed_row | F.coalesce(
+            F.col(f"__s_{c}") != F.col(f"__t_{c}"), F.lit(False)
+        )
+    failed = joined.agg(
+        F.count_distinct(F.when(failed_row, F.struct(key))).alias(
+            "samples_failed"
+        )
     )
-    n_sampled = sample.agg(F.count(F.lit(1)).alias("samples_validated"))
     base = (
         count_reconcile(source, target)
-        .crossJoin(n_sampled)
         .crossJoin(failed)
+        # the sample is the last ``sample_size`` rows of ``source``
+        .withColumn(
+            "samples_validated",
+            F.least(F.lit(sample_size), F.col("source_count")).cast("long"),
+        )
         .withColumn(
             "samples_passed",
             F.col("samples_validated") - F.col("samples_failed"),

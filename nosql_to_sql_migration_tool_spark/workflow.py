@@ -13,6 +13,15 @@ private/Data_Migration.ps1:481-544):
 Driver-side code here only sequences jobs and carries small metadata
 (stats rows, plans, counters); every data movement is a distributed
 plan from the operator modules.
+
+Job structure of ``full_migration`` (it is bound by driver latency, so
+job count is its cost model): the inference collect, a ``limit`` count
+capping the DDL sample, then ONE write job per table — all tables
+submitted together through ``hadoop_fs.run_concurrent``, each counting
+its own rows with ``DataFrame.observe`` so no table is read back to be
+counted — and finally one validation verdict, which reads the main table
+back from disk and compares it in a single sample join + aggregate
+(``operators/validation.py``).
 """
 
 from __future__ import annotations
@@ -20,9 +29,14 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from nosql_to_sql_migration_tool_spark.hadoop_fs import (
+    path_exists,
+    run_concurrent,
+)
 from nosql_to_sql_migration_tool_spark.operators.cdc import (
     apply_changes_to_path,
     load_state,
@@ -82,8 +96,11 @@ def full_migration(
     4. normalization into main + FK child tables (the intended
        New-SQLSchema data pipeline the reference never implemented)
     5. parquet write per table (Start-DataMigration's load, one
-       distributed job per table instead of a per-row DML loop)
-    6. count/sample validation of the written main table
+       distributed job per table instead of a per-row DML loop), all
+       tables written concurrently; ``report.tables`` holds the row
+       count each committed write observed
+    6. count/sample validation of the written main table, read back
+       from disk
     """
     start = time.monotonic()
     report = MigrationReport(table_name, "FullMigration")
@@ -94,7 +111,7 @@ def full_migration(
             documents, doc_col, id_col, sample_docs=sample_size
         ).collect()
     ]
-    n_sampled = min(sample_size, documents.count())
+    n_sampled = documents.limit(sample_size).count()
     plan = plan_tables(stats, table_name, primary_key=id_col, total_docs=n_sampled)
 
     os.makedirs(output_dir, exist_ok=True)
@@ -108,10 +125,24 @@ def full_migration(
     ).select(id_col, "__doc.*")
 
     tables = normalize_document_table(typed, id_col, table_name)
-    for name, df in tables.items():
-        path = os.path.join(output_dir, f"{name}.parquet")
-        df.write.mode("overwrite").parquet(path)
-        report.tables[name] = spark.read.parquet(path).count()
+    # Each write counts its own rows: the observation is filled by the
+    # committed write job, so no table is read back just to count it. A
+    # fresh unnamed Observation per table per call keeps concurrent
+    # migrations from sharing a metric name.
+    observed = {name: Observation() for name in tables}
+    writes = [
+        partial(
+            df.observe(observed[name], F.count(F.lit(1)).alias("n"))
+            .write.mode("overwrite")
+            .parquet,
+            os.path.join(output_dir, f"{name}.parquet"),
+        )
+        for name, df in tables.items()
+    ]
+    # Read observations only after every write settled: a failed write
+    # re-raises here and never reaches a blocking ``.get``.
+    run_concurrent(*writes)
+    report.tables = {name: obs.get["n"] for name, obs in observed.items()}
 
     main_path = os.path.join(output_dir, f"{table_name}.parquet")
     written_main = spark.read.parquet(main_path)
@@ -204,12 +235,12 @@ def incremental_migration(
     """Typed-source incremental sync: first run loads the target and
     seeds the state; later runs hash-diff against persisted state and
     apply only touched partitions (Invoke-IncrementalMigration branch +
-    Start-IncrementalSync)."""
+    Start-IncrementalSync). A kept target whose state is missing gets
+    its state rebuilt from the target snapshot, so the round still
+    classifies against what is on disk."""
     start = time.monotonic()
     target_path = os.path.join(output_dir, f"{table_name}.parquet")
     state_path = os.path.join(output_dir, f"sync_state_{table_name}")
-
-    from nosql_to_sql_migration_tool_spark.hadoop_fs import path_exists
 
     target_exists = path_exists(spark, target_path)
 
@@ -221,6 +252,12 @@ def incremental_migration(
     else:
         report = MigrationReport(table_name, "IncrementalSync")
         state = load_state(spark, state_path)
+        if state is None:
+            # Lost state next to a kept target: classifying every source
+            # row NEW would union them onto the target and duplicate every
+            # key. Rebuild the state from the target snapshot so the round
+            # classifies against what is on disk.
+            state = snapshot_state(spark.read.parquet(target_path), key)
         diff, new_state = sync(source, state, key)
         new_state_rows = new_state.localCheckpoint(eager=True)
         counts = {

@@ -81,3 +81,27 @@ def test_try_read_parquet_probe_semantics(spark, tmp_path):
     spark.range(7).write.parquet(real)
     got = try_read_parquet(spark, real)
     assert got is not None and got.count() == 7
+
+
+def test_run_concurrent_jobs_inherit_caller_job_group(spark):
+    """Jobs submitted from run_concurrent's pool threads carry the
+    caller's job group, so they can be attributed and cancelled."""
+    import time
+
+    from nosql_to_sql_migration_tool_spark.hadoop_fs import run_concurrent
+
+    sc = spark.sparkContext
+    group = "test-run-concurrent-group"
+    sc.setJobGroup(group, "run_concurrent inheritance")
+    try:
+        run_concurrent(
+            lambda: spark.range(10).count(), lambda: spark.range(20).count()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store asynchronously
+    deadline = time.monotonic() + 30
+    while len(sc.statusTracker().getJobIdsForGroup(group)) < 2:
+        assert time.monotonic() < deadline, "pool-thread jobs left the group"
+        time.sleep(0.1)

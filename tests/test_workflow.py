@@ -72,6 +72,10 @@ def test_full_migration_end_to_end(spark, tmp_path):
     assert report.tables["people_address"] == n_with_addr
     assert report.tables["people_tags"] > 0
     assert report.tables["people_items"] > 0
+    # each count is the committed write's own observation: it must match
+    # a fresh read of the table on disk
+    for name, n in report.tables.items():
+        assert n == spark.read.parquet(f"{out}/{name}.parquet").count(), name
 
     ddl = open(report.ddl_path).read()
     assert ddl.count("CREATE TABLE") == 4
@@ -82,6 +86,79 @@ def test_full_migration_end_to_end(spark, tmp_path):
     # written child tables carry parent FK + ordinal
     tags = spark.read.parquet(f"{out}/people_tags.parquet")
     assert set(tags.columns) == {"people_doc_id", "array_index", "value"}
+
+
+def test_full_migration_empty_child_table_reports_zero(spark, tmp_path):
+    """A child table whose write commits no rows still reports 0 (its
+    observation completes with an empty count) instead of blocking."""
+    import threading
+
+    docs = spark.createDataFrame(
+        [
+            # a mixed-element array infers as array<struct> but parses
+            # to NULL, so the child table comes out empty
+            (1, '{"name": "a", "tags": [{"x": 1}, 2]}'),
+            (2, '{"name": "b"}'),
+        ],
+        "doc_id long, doc string",
+    )
+    out = str(tmp_path / "empty_child")
+    result = {}
+
+    def run():
+        result["report"] = full_migration(
+            spark, docs, "doc", "doc_id", "t", out
+        )
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "full_migration blocked on an empty table"
+    report = result["report"]
+    assert report.tables == {"t": 2, "t_tags": 0}
+    assert spark.read.parquet(f"{out}/t_tags.parquet").count() == 0
+    assert report.validation["status"] == "PASSED"
+
+
+def _settled_job_ids(spark) -> set[int]:
+    """Every job id the status store knows, read once the listener bus
+    has stopped adding any (job-start events land asynchronously)."""
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    prev = None
+    while True:
+        cur = set(tracker.getJobIdsForGroup(None))
+        if cur == prev:
+            return cur
+        prev = cur
+        time.sleep(0.3)
+
+
+# Jobs of one full_migration of the sf0.001 ragged fixture with its four
+# self-counting table writes and the one-pass validation verdict. The
+# sequential write-then-read-back-count loop and the two-branch verdict
+# ran 31.
+FULL_MIGRATION_JOB_CEILING = 16
+
+
+def test_full_migration_job_ceiling(spark, tmp_path):
+    """Driver-latency guard: concurrent self-counting writes and the
+    one-pass verdict keep one migration to a fixed number of jobs."""
+    docs = ragged_documents(load_table(spark, SF_DIR_SMOKE, "customer"))
+
+    def migrate(out):
+        return full_migration(
+            spark, docs, "doc", "doc_id", "people", str(tmp_path / out),
+            dialect="mysql", sample_size=1000,
+        )
+
+    migrate("warm")  # warm caches/codegen
+    before = _settled_job_ids(spark)
+    report = migrate("migrated")
+    jobs = len(_settled_job_ids(spark) - before)
+    assert report.validation["status"] == "PASSED"
+    assert jobs <= FULL_MIGRATION_JOB_CEILING, jobs
 
 
 def test_run_workflow_multi_collection(spark, tmp_path):
@@ -134,6 +211,37 @@ def test_incremental_migration_rounds(spark, tmp_path):
         spark, changed, "c_custkey", "customer", out, "c_nationkey"
     )
     assert set(third.validation) == {"UNCHANGED"}
+
+
+def test_incremental_migration_rebuilds_lost_state(spark, tmp_path):
+    """A sync whose ``sync_state_<t>`` is gone must classify against the
+    target on disk, not treat every source row as NEW and union the
+    source onto the kept target (which duplicated every key)."""
+    import shutil
+
+    customer = load_table(spark, SF_DIR_SMOKE, "customer")
+    out = tmp_path / "lost_state"
+    incremental_migration(
+        spark, customer, "c_custkey", "customer", str(out), "c_nationkey"
+    )
+    shutil.rmtree(out / "sync_state_customer")
+
+    changed = changed_customer_source(customer)
+    report = incremental_migration(
+        spark, changed, "c_custkey", "customer", str(out), "c_nationkey"
+    )
+    assert report.operation == "IncrementalSync"
+    target = spark.read.parquet(str(out / "customer.parquet"))
+    assert target.count() == target.select("c_custkey").distinct().count()
+    assert report.tables["customer"] == changed.count()
+    got = target.select(*changed.columns)
+    assert got.exceptAll(changed).count() == 0
+    assert changed.exceptAll(got).count() == 0
+    # the rebuilt state is persisted, so the next round is a no-op
+    again = incremental_migration(
+        spark, changed, "c_custkey", "customer", str(out), "c_nationkey"
+    )
+    assert set(again.validation) == {"UNCHANGED"}
 
 
 def test_clean_corpus_pipeline(spark):
