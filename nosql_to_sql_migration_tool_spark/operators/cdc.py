@@ -16,16 +16,27 @@ it is small relative to the source (steady-state syncs) AQE selects a
 broadcast join automatically.
 
 State persistence (reference: sync_state_<t>.json, Sync.ps1:296-349) is a
-parquet state table — ``save_state`` / ``load_state`` below. The
+parquet state table — ``save_state`` / ``load_state`` below. A whole
+round onto a partitioned parquet target is ``initial_load`` (first run)
+or ``sync_to_path`` (every later run); both ``workflow.py`` and the
 streaming analogue (foreachBatch upsert + checkpoint, availableNow
-trigger) lives in ``streaming/cdc_stream.py``.
+trigger, ``streaming/cdc_stream.py``) call them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from functools import partial
+from urllib.parse import unquote
+
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from nosql_to_sql_migration_tool_spark.functions.hashing import row_hash, scalar_columns
+from nosql_to_sql_migration_tool_spark.hadoop_fs import (
+    delete_paths,
+    list_dirs,
+    run_concurrent,
+    try_read_parquet,
+)
 
 CHANGE_TYPES = ("NEW", "UPDATED", "DELETED", "UNCHANGED")
 
@@ -40,8 +51,6 @@ def load_state(spark: SparkSession, path: str) -> DataFrame | None:
     """Load persisted sync state; ``None`` (missing/unreadable state)
     means the caller falls back to a full sync — the reference's
     corrupt-state fallback (Get-SyncState, Sync.ps1:296-329)."""
-    from nosql_to_sql_migration_tool_spark.hadoop_fs import try_read_parquet
-
     return try_read_parquet(spark, path)
 
 
@@ -213,6 +222,34 @@ def apply_changes_partitioned(
     return apply_changes(scoped_target, diff, key, change_col), touched
 
 
+_DEFAULT_PARTITION = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _partition_dir_value(col: str):
+    """The value Spark names a partition directory after, before path
+    escaping: the string cast, with NULL and '' both mapped to the hive
+    default partition."""
+    return F.coalesce(
+        F.nullif(F.col(col).cast("string"), F.lit("")), F.lit(_DEFAULT_PARTITION)
+    )
+
+
+def _delete_partitions(spark, target_path: str, partition_col: str, values) -> None:
+    """Remove the partition directories of ``values`` (unescaped directory
+    values). Spark percent-escapes partition values in paths (``x:y`` is
+    stored as ``p=x%3Ay``), so directories are matched by listing and
+    unescaping their names, never by formatting a path from the value."""
+    prefix = f"{partition_col}="
+    by_value = {
+        unquote(name[len(prefix):]): name
+        for name in list_dirs(spark, target_path)
+        if name.startswith(prefix)
+    }
+    delete_paths(
+        spark, (f"{target_path}/{by_value[v]}" for v in values if v in by_value)
+    )
+
+
 def apply_changes_to_path(
     spark,
     target_path: str,
@@ -220,55 +257,102 @@ def apply_changes_to_path(
     key: str,
     partition_col: str,
     change_col: str = "change_type",
-) -> None:
-    """Apply a diff in place on a partitioned parquet directory.
+) -> int:
+    """Apply a diff in place on a partitioned parquet directory and return
+    the target's new row count.
 
     Uses dynamic partition overwrite so only touched partition
     directories are replaced (the reference's per-row DML, Sync.ps1:179-247,
-    becomes one scoped write). ``localCheckpoint`` materializes the new
-    content first because Spark refuses to overwrite a path it is still
-    reading; a production deployment on object storage would stage to a
-    temp prefix or use a transactional table format's MERGE instead.
+    becomes one scoped write). ``diff`` is read several times, so callers
+    pass it materialized (``sync_to_path`` checkpoints it once).
+
+    One target-side aggregate drives the apply: the target is scanned
+    once, projected to key and partition columns, left-joined to the
+    broadcast DELETED/UPDATED keys, unioned with the source-side
+    NEW/UPDATED partitions and grouped by partition. Its metadata-sized
+    result gives, per partition, the on-disk row count and whether a
+    change touches it. The rewrite then reads only the touched partitions
+    (a literal ``isin`` filter that Spark prunes at scan time); untouched
+    partitions are read once, key and partition columns only, and never
+    rewritten. The rewrite reads the directories it replaces in the same
+    job: a dynamic overwrite stages its output and swaps the partition
+    directories in only at job commit, after every read has finished (a
+    static overwrite deletes the target before the job reads it, so it
+    could not). A production deployment on object storage would use a
+    transactional table format's MERGE instead.
 
     Dynamic overwrite only replaces partitions PRESENT in the written
     data — a partition whose every row was DELETED produces no output
     rows, so its old directory would silently survive. Touched
     partitions that received no output are therefore removed explicitly
     through the Hadoop FileSystem API (works on any Hadoop-supported
-    store). The two collects are metadata-sized: touched-partition
-    values, never data rows.
+    store).
+
+    The returned count is the on-disk rows of untouched partitions plus
+    the rows written, which the write observes along with the partitions
+    it writes to — the target is never read back to be counted.
     """
     target = spark.read.parquet(target_path)
-    rows, touched = apply_changes_partitioned(
-        target, diff, key, partition_col, change_col
+    change = F.col(change_col)
+    gone = diff.filter(change.isin("DELETED", "UPDATED")).select(
+        key, F.lit(True).alias("__gone")
     )
-    rows = rows.localCheckpoint(eager=True)
-    touched_vals = {r[0] for r in touched.collect()}
-    written_vals = {
-        r[0] for r in rows.select(partition_col).distinct().collect()
-    }
-    # dynamic mode pinned PER WRITE, not via session conf: the previous
-    # session-level set was never restored, silently flipping every
-    # later overwrite in the session to dynamic (exposed in round 7 by
-    # the rollup-compaction test, whose static overwrite then leaked
-    # stale batch_id dirs).
-    rows.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(partition_col).parquet(target_path)
-    emptied = touched_vals - written_vals
-    if emptied:
-        from nosql_to_sql_migration_tool_spark.hadoop_fs import delete_paths
-
-        # Spark's partition-dir naming for scalar values; NULL
-        # partitions write __HIVE_DEFAULT_PARTITION__.
-        delete_paths(
-            spark,
-            (
-                f"{target_path}/{partition_col}="
-                f"{'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-                for v in emptied
-            ),
+    on_disk = (
+        target.select(key, partition_col)
+        .join(F.broadcast(gone), key, "left")
+        .select(
+            partition_col,
+            F.lit(1).alias("__rows"),
+            F.col("__gone").isNotNull().alias("__touched"),
         )
+    )
+    arriving_rows = diff.filter(change.isin("NEW", "UPDATED"))
+    arriving = arriving_rows.select(
+        partition_col, F.lit(0).alias("__rows"), F.lit(True).alias("__touched")
+    )
+    parts = (
+        on_disk.unionByName(arriving)
+        .groupBy(partition_col, _partition_dir_value(partition_col).alias("__dir"))
+        .agg(F.sum("__rows").alias("__rows"), F.max("__touched").alias("__touched"))
+        .collect()
+    )
+    untouched_rows = sum(r["__rows"] for r in parts if not r["__touched"])
+    touched = [r for r in parts if r["__touched"]]
+    if not touched:
+        return untouched_rows
+
+    values = [r[partition_col] for r in touched]
+    in_touched = F.col(partition_col).isin([v for v in values if v is not None])
+    if None in values:
+        in_touched = in_touched | F.col(partition_col).isNull()
+    # ``apply_changes`` on the touched partitions, with the changed keys
+    # broadcast: their checkpoint carries no size estimate, so Spark
+    # would otherwise shuffle both sides.
+    kept = target.filter(in_touched).join(F.broadcast(gone), key, "left_anti")
+    written = Observation()
+    # One task per partition value writes one file per touched directory;
+    # without the shuffle every scan split reading a directory adds a file.
+    # Dynamic mode is pinned PER WRITE, not via session conf: a
+    # session-level set would flip every later overwrite in the session
+    # to dynamic (the rollup compaction's static overwrite then leaked
+    # stale batch_id dirs).
+    (
+        kept.unionByName(arriving_rows.select(*target.columns))
+        .repartition(partition_col)
+        .observe(
+            written,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(_partition_dir_value(partition_col)).alias("dirs"),
+        )
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
+    emptied = {r["__dir"] for r in touched} - set(written.get["dirs"])
+    if emptied:
+        _delete_partitions(spark, target_path, partition_col, emptied)
+    return untouched_rows + written.get["n"]
 
 
 def sync(
@@ -303,6 +387,67 @@ def diff_counts(diff: DataFrame, change_col: str = "change_type") -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(change_col)
     )
+
+
+def initial_load(
+    spark: SparkSession,
+    source: DataFrame,
+    key: str,
+    target_path: str,
+    state_path: str,
+    partition_col: str,
+) -> int:
+    """First sync round: write the partitioned target and seed the state
+    from the same snapshot; returns the rows written. The two writes go
+    to disjoint paths and run concurrently. The target write counts its
+    own rows, so the target is never read back to be counted."""
+    loaded = Observation()
+    run_concurrent(
+        partial(
+            source.observe(loaded, F.count(F.lit(1)).alias("n"))
+            .write.partitionBy(partition_col)
+            .parquet,
+            target_path,
+        ),
+        partial(save_state, snapshot_state(source, key), state_path),
+    )
+    return loaded.get["n"]
+
+
+def sync_to_path(
+    spark: SparkSession,
+    source: DataFrame,
+    key: str,
+    target_path: str,
+    state_path: str,
+    partition_col: str,
+) -> tuple[dict[str, int], int]:
+    """One incremental-sync round onto an existing partitioned parquet
+    target: ``({change_type: rows}, new target row count)``.
+
+    The hash diff is evaluated exactly once, by one eager
+    ``localCheckpoint``. That job also observes the change counts; the
+    apply (``apply_changes_to_path``) and the new state
+    (``change_type != DELETED``) read the materialization. The apply
+    commits before the state is saved, so a failed apply leaves the old
+    state to re-diff against.
+
+    A kept target whose state is missing gets its state rebuilt from the
+    target snapshot: classifying every source row NEW would union them
+    onto the target and duplicate every key.
+    """
+    state = load_state(spark, state_path)
+    if state is None:
+        state = snapshot_state(spark.read.parquet(target_path), key)
+    diff, _ = sync(source, state, key)
+    change = F.col("change_type")
+    counted = Observation()
+    diff = diff.observe(
+        counted, *[F.count_if(change == t).alias(t) for t in CHANGE_TYPES]
+    ).localCheckpoint(eager=True)
+    rows = apply_changes_to_path(spark, target_path, diff, key, partition_col)
+    save_state(diff.filter(change != "DELETED").select(key, "row_hash"), state_path)
+    return {t: n for t, n in counted.get.items() if n}, rows
 
 
 def maintain_aggregate(

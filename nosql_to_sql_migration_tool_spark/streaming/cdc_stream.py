@@ -23,10 +23,8 @@ from pyspark.sql.types import StructType
 from nosql_to_sql_migration_tool_spark.hadoop_fs import path_exists
 
 from nosql_to_sql_migration_tool_spark.operators.cdc import (
-    apply_changes_to_path,
-    load_state,
-    save_state,
-    sync,
+    initial_load,
+    sync_to_path,
 )
 
 
@@ -53,18 +51,14 @@ def stream_sync(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        state = load_state(spark, state_path)
-        diff, new_state = sync(batch_df, state, key)
-        # materialize before overwriting the paths these plans read
-        new_state_rows = new_state.localCheckpoint(eager=True)
-        target_exists = path_exists(spark, target_path)
-        if target_exists:
-            apply_changes_to_path(
-                spark, target_path, diff, key, partition_col
+        if path_exists(spark, target_path):
+            sync_to_path(
+                spark, batch_df, key, target_path, state_path, partition_col
             )
         else:
-            batch_df.write.partitionBy(partition_col).parquet(target_path)
-        save_state(new_state_rows, state_path)
+            initial_load(
+                spark, batch_df, key, target_path, state_path, partition_col
+            )
 
     return (
         source_stream.writeStream.foreachBatch(handle_batch)

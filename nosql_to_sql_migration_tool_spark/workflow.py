@@ -22,6 +22,19 @@ its own rows with ``DataFrame.observe`` so no table is read back to be
 counted — and finally one validation verdict, which reads the main table
 back from disk and compares it in a single sample join + aggregate
 (``operators/validation.py``).
+
+Job structure of an ``incremental_migration`` sync round, bound by
+driver latency the same way (``operators/cdc.sync_to_path``): the state
+read, ONE eager checkpoint of the hash diff that also observes the
+change counts, the target's partition discovery, ONE metadata-sized
+aggregate over the target's key and partition columns giving each
+partition's on-disk row count and whether a change touches it, ONE
+dynamic-overwrite rewrite of only the touched partitions that counts
+its own rows, and the state write. The reported target count is the
+untouched partitions' on-disk rows plus the rows written, so the target
+is listed once per round and never read back to be counted. The first
+round writes the target and the seeded state concurrently, the target
+write counting its own rows.
 """
 
 from __future__ import annotations
@@ -38,11 +51,8 @@ from nosql_to_sql_migration_tool_spark.hadoop_fs import (
     run_concurrent,
 )
 from nosql_to_sql_migration_tool_spark.operators.cdc import (
-    apply_changes_to_path,
-    load_state,
-    save_state,
-    snapshot_state,
-    sync,
+    initial_load,
+    sync_to_path,
 )
 from nosql_to_sql_migration_tool_spark.operators.infer import (
     infer_schema,
@@ -242,34 +252,16 @@ def incremental_migration(
     target_path = os.path.join(output_dir, f"{table_name}.parquet")
     state_path = os.path.join(output_dir, f"sync_state_{table_name}")
 
-    target_exists = path_exists(spark, target_path)
-
-    if not target_exists:
+    if not path_exists(spark, target_path):
         report = MigrationReport(table_name, "InitialLoad")
-        source.write.partitionBy(partition_col).parquet(target_path)
-        save_state(snapshot_state(source, key), state_path)
-        report.tables[table_name] = spark.read.parquet(target_path).count()
+        report.tables[table_name] = initial_load(
+            spark, source, key, target_path, state_path, partition_col
+        )
     else:
         report = MigrationReport(table_name, "IncrementalSync")
-        state = load_state(spark, state_path)
-        if state is None:
-            # Lost state next to a kept target: classifying every source
-            # row NEW would union them onto the target and duplicate every
-            # key. Rebuild the state from the target snapshot so the round
-            # classifies against what is on disk.
-            state = snapshot_state(spark.read.parquet(target_path), key)
-        diff, new_state = sync(source, state, key)
-        new_state_rows = new_state.localCheckpoint(eager=True)
-        counts = {
-            r["change_type"]: r["n"]
-            for r in diff.groupBy("change_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        apply_changes_to_path(spark, target_path, diff, key, partition_col)
-        save_state(new_state_rows, state_path)
-        report.tables[table_name] = spark.read.parquet(target_path).count()
-        report.validation = counts
+        report.validation, report.tables[table_name] = sync_to_path(
+            spark, source, key, target_path, state_path, partition_col
+        )
     report.duration_sec = time.monotonic() - start
     return report
 

@@ -110,6 +110,39 @@ def test_apply_removes_fully_deleted_partition_dir(spark, tmp_path):
     assert _same_rows(result, source)
 
 
+def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
+    """Spark percent-escapes partition values in directory names (``x:y``
+    is stored as ``p=x%3Ay``, ``a/b`` as ``p=a%2Fb``) and writes NULL to
+    the hive default partition. Emptying such partitions must still
+    remove their directories, and the returned count must match disk."""
+    target = spark.createDataFrame(
+        [(1, "x:y", "a"), (2, "x:y", "b"), (3, "a/b", "c"), (4, None, "d"),
+         (5, "plain", "e"), (6, "a/b", "f")],
+        "k long, p string, v string",
+    )
+    target_path = str(tmp_path / "tgt")
+    target.write.partitionBy("p").parquet(target_path)
+    assert {"p=x%3Ay", "p=a%2Fb", "p=__HIVE_DEFAULT_PARTITION__"} <= set(
+        os.listdir(target_path)
+    )
+
+    # x:y and NULL lose every row; key 3 moves from a/b to plain, so a/b
+    # keeps key 6 only
+    source = spark.createDataFrame(
+        [(3, "plain", "c"), (5, "plain", "e"), (6, "a/b", "f")],
+        "k long, p string, v string",
+    )
+    diff, _ = sync(source, snapshot_state(target, "k"), "k")
+    n = apply_changes_to_path(spark, target_path, diff, "k", "p")
+
+    assert sorted(d for d in os.listdir(target_path) if d.startswith("p=")) == [
+        "p=a%2Fb", "p=plain",
+    ]
+    result = spark.read.parquet(target_path).select(*source.columns)
+    assert n == result.count() == 3
+    assert _same_rows(result, source)
+
+
 def test_full_sync_with_no_state_classifies_all_new(spark):
     customer = load_table(spark, SF_DIR_SMOKE, "customer")
     diff, new_state = sync(customer, None, "c_custkey")

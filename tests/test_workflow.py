@@ -5,6 +5,8 @@ written store (Invoke-IncrementalMigration parity)."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from nosql_to_sql_migration_tool_spark.fixtures import (
@@ -242,6 +244,83 @@ def test_incremental_migration_rebuilds_lost_state(spark, tmp_path):
         spark, changed, "c_custkey", "customer", str(out), "c_nationkey"
     )
     assert set(again.validation) == {"UNCHANGED"}
+
+
+def test_incremental_migration_counts_match_disk_over_rounds(spark, tmp_path):
+    """Each round's reported target count is the apply's own count, never
+    a read-back: it must equal a fresh on-disk count, and the target must
+    equal the round's source, across a round with an UPDATED row moving
+    to another partition, a round that empties a partition and a
+    no-change round."""
+    customer = load_table(spark, SF_DIR_SMOKE, "customer")
+    out = str(tmp_path / "rounds")
+    target_path = f"{out}/customer.parquet"
+    # a key the changed source keeps, so the move round sees it UPDATED
+    moved_key = customer.filter(
+        (F.col("c_nationkey") == 1) & (F.col("c_custkey") % 11 != 0)
+    ).first()["c_custkey"]
+    moved = customer.withColumn(
+        "c_nationkey",
+        F.when(F.col("c_custkey") == moved_key, F.lit(2)).otherwise(
+            F.col("c_nationkey")
+        ),
+    )
+    emptied = moved.filter(F.col("c_nationkey") != 3)
+    rounds = [
+        ("InitialLoad", customer, None),
+        ("IncrementalSync", changed_customer_source(customer), None),
+        ("IncrementalSync", moved, None),
+        ("IncrementalSync", emptied, None),
+        ("IncrementalSync", emptied, {"UNCHANGED"}),
+    ]
+    for operation, source, kinds in rounds:
+        report = incremental_migration(
+            spark, source, "c_custkey", "customer", out, "c_nationkey"
+        )
+        assert report.operation == operation
+        if kinds is not None:
+            assert set(report.validation) == kinds
+        on_disk = spark.read.parquet(target_path)
+        assert report.tables["customer"] == on_disk.count() == source.count()
+        got = on_disk.select(*source.columns)
+        assert got.exceptAll(source).isEmpty()
+        assert source.exceptAll(got).isEmpty()
+    assert moved_key in {
+        r["c_custkey"]
+        for r in spark.read.parquet(f"{target_path}/c_nationkey=2").collect()
+    }
+    assert not os.path.exists(f"{target_path}/c_nationkey=3")
+
+
+# Jobs of one warm incremental_migration sync round on the sf0.001
+# customer fixture: the state and target reads, one diff checkpoint that
+# also counts the changes, one target aggregate, one rewrite of the
+# touched partitions that counts its own rows, and the state write. The
+# round that evaluated the lazy diff four times and read the target back
+# to count it ran 30.
+INCREMENTAL_SYNC_JOB_CEILING = 12
+
+
+def test_incremental_sync_job_ceiling(spark, tmp_path):
+    """Driver-latency guard: one sync round evaluates the hash diff once
+    and never reads the target back to count it."""
+    customer = load_table(spark, SF_DIR_SMOKE, "customer")
+    changed = changed_customer_source(customer)
+    out = str(tmp_path / "inc")
+
+    def sync_round(source):
+        return incremental_migration(
+            spark, source, "c_custkey", "customer", out, "c_nationkey"
+        )
+
+    sync_round(customer)
+    sync_round(changed)  # warm caches/codegen
+    before = _settled_job_ids(spark)
+    report = sync_round(customer)
+    jobs = len(_settled_job_ids(spark) - before)
+    assert report.operation == "IncrementalSync"
+    assert set(report.validation) == {"NEW", "UPDATED", "DELETED", "UNCHANGED"}
+    assert jobs <= INCREMENTAL_SYNC_JOB_CEILING, jobs
 
 
 def test_clean_corpus_pipeline(spark):
