@@ -12,12 +12,16 @@ two-stage distributed job:
    Catalyst cannot express, so it runs as an Arrow-batched ``mapInPandas``
    (vectorized transfer, ~constant per-batch Python overhead) — never a
    row-at-a-time UDF.
-2. **Stats aggregation** — everything else is built-in JVM aggregation:
-   occurrence counts, per-type histograms with **majority-vote** typing
+2. **Stats aggregation** — everything else is ONE built-in JVM
+   aggregate per path: occurrence counts, one count per JSON type
+   (``JSON_TYPES``) from which the **majority-vote** type is picked
    (Sql_Schema_Generator.ps1:416 — unlike Spark's own least-common-
    supertype JSON inference), max string length for VARCHAR sizing
    (Sql_Schema_Generator.ps1:427-433), and bounded distinct samples
-   (≤3, Analyze_scheme.ps1:163-171).
+   (≤3, Analyze_scheme.ps1:163-171). Because the path stream has one
+   consumer, the Python walk runs once per inference: a second
+   aggregate over the same stream would re-run the walk in its own
+   Python-worker job.
 
 Scale: the exploded stream is (paths-per-doc × docs) narrow rows; stats
 aggregate with map-side partial combine, so the shuffle carries only
@@ -41,6 +45,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 PATHS_SCHEMA = "doc_id long, path string, dtype string, str_len int, sample string"
+
+# Every dtype ``_classify`` emits, sorted: the majority vote compares
+# (count, name) structs, so a tie goes to the largest name.
+JSON_TYPES = ("array", "boolean", "integer", "null", "number", "object", "string")
 
 
 def _classify(value) -> str:
@@ -120,15 +128,12 @@ def schema_stats(
     name — a pinned, deterministic rule (the reference's sort is
     unstable on ties, Sql_Schema_Generator.ps1:416).
     """
-    hist = paths.groupBy("path", "dtype").agg(F.count(F.lit(1)).alias("cnt"))
-    majority = hist.groupBy("path").agg(
-        F.max(F.struct("cnt", "dtype")).alias("__top")
-    ).select("path", F.col("__top.dtype").alias("majority_type"))
-
+    counts = {t: F.col(f"__n_{t}") for t in JSON_TYPES}
     aggs = [
         F.countDistinct("doc_id").alias("n_docs"),
         F.count(F.lit(1)).alias("n_values"),
         F.max("str_len").cast("long").alias("max_len"),
+        *(F.count_if(F.col("dtype") == t).alias(f"__n_{t}") for t in JSON_TYPES),
     ]
     if n_samples > 0:
         aggs.append(
@@ -138,8 +143,28 @@ def schema_stats(
         )
     if with_type_set:
         aggs.append(F.sort_array(F.collect_set("dtype")).alias("type_set"))
-    base = paths.groupBy("path").agg(*aggs)
-    return base.join(majority, "path")
+    stats = paths.groupBy("path").agg(*aggs)
+
+    majority = F.greatest(
+        *(F.struct(n.alias("n"), F.lit(t).alias("dtype")) for t, n in counts.items())
+    )["dtype"]
+    # A dtype outside JSON_TYPES would be counted by no column and the
+    # vote would silently pick among the rest: fail the query instead.
+    typed = sum(counts.values(), F.lit(0))
+    majority_type = F.when(
+        typed != F.col("n_values"),
+        F.raise_error(
+            F.concat(
+                F.lit("schema_stats: path "),
+                F.col("path"),
+                F.lit(f" has a dtype outside {', '.join(JSON_TYPES)}"),
+            )
+        ),
+    ).otherwise(majority)
+    return stats.select(
+        *(c for c in stats.columns if not c.startswith("__n_")),
+        majority_type.alias("majority_type"),
+    )
 
 
 def spark_schema_from_stats(stats: list[dict]):

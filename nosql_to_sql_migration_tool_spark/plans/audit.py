@@ -103,7 +103,7 @@ def python_stage_count_in(plan: str) -> int:
     return len(
         re.findall(
             r"ArrowEvalPython|BatchEvalPython|MapInPandas|"
-            r"FlatMapGroupsInPandas|PythonMapInArrow",
+            r"FlatMapGroupsInPandas|(?:Python)?MapInArrow",
             plan,
         )
     )

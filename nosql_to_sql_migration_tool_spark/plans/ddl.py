@@ -160,10 +160,10 @@ class SchemaPlan:
         return [t.name for t in self.tables]
 
 
-def _surrogate_and_fk(parent: str, parent_key: str) -> list[ColumnPlan]:
+def _surrogate_and_fk(parent: str, parent_key: str, key_type: str) -> list[ColumnPlan]:
     return [
         ColumnPlan("id", "INT", primary_key=True, identity=True),
-        ColumnPlan(f"{parent}_{parent_key}", "VARCHAR(255)", not_null=True),
+        ColumnPlan(f"{parent}_{parent_key}", key_type, not_null=True),
     ]
 
 
@@ -195,6 +195,14 @@ def plan_tables(
             not_null=not_null or path == primary_key,
         )
 
+    # child FK columns take the parent key's type; a key without stats
+    # is typed as a string
+    key_type = (
+        col(primary_key).sql_type
+        if primary_key in by_path
+        else sql_type("string", primary_key)
+    )
+
     flat: list[str] = []
     nested_roots: dict[str, list[str]] = {}
     array_roots: list[str] = []
@@ -217,7 +225,7 @@ def plan_tables(
 
     for root in sorted(nested_roots):
         child = f"{table_name}_{root}"
-        cols = _surrogate_and_fk(table_name, primary_key) + [
+        cols = _surrogate_and_fk(table_name, primary_key, key_type) + [
             col(p, name=p.split(".", 1)[1]) for p in sorted(nested_roots[root])
         ]
         plan.tables.append(
@@ -229,7 +237,7 @@ def plan_tables(
         child = f"{table_name}_{root}"
         elem = by_path.get(f"{root}[]")
         elem_type = elem["majority_type"] if elem else "null"
-        base = _surrogate_and_fk(table_name, primary_key) + [
+        base = _surrogate_and_fk(table_name, primary_key, key_type) + [
             ColumnPlan("array_index", "INT", not_null=True)
         ]
         if elem_type == "object":

@@ -15,12 +15,15 @@ Driver-side code here only sequences jobs and carries small metadata
 plan from the operator modules.
 
 Job structure of ``full_migration`` (it is bound by driver latency, so
-job count is its cost model): the inference collect, a ``limit`` count
-capping the DDL sample, then ONE write job per table — all tables
-submitted together through ``hadoop_fs.run_concurrent``, each counting
-its own rows with ``DataFrame.observe`` so no table is read back to be
-counted — and finally one validation verdict, which reads the main table
-back from disk and compares it in a single sample join + aggregate
+job count is its cost model): the inference collect, whose single
+aggregate walks the sample once and also counts the sampled documents
+(an ``Observation`` on the ``limit``, the NOT NULL denominator), then
+ONE write job per table — all tables submitted together through
+``hadoop_fs.run_concurrent``, each counting its own rows with
+``DataFrame.observe`` so no table is read back to be counted — and
+finally one validation verdict, which reads the main table back from
+disk with its known schema (no footer-schema inference job) and
+compares it in a single sample join + aggregate
 (``operators/validation.py``).
 
 Job structure of an ``incremental_migration`` sync round, bound by
@@ -45,6 +48,7 @@ from dataclasses import dataclass, field
 from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import FractionalType, IntegralType
 
 from nosql_to_sql_migration_tool_spark.hadoop_fs import (
     path_exists,
@@ -87,6 +91,25 @@ class MigrationReport:
         return sum(self.tables.values())
 
 
+def _key_stats(documents: DataFrame, id_col: str, total_docs: int) -> dict:
+    """Stats row for the key column, which is a frame column, not a JSON
+    path, so inference never sees it: typed from its Spark type and
+    present in every document."""
+    key_type = documents.schema[id_col].dataType
+    if isinstance(key_type, IntegralType):
+        majority_type = "integer"
+    elif isinstance(key_type, FractionalType):
+        majority_type = "number"
+    else:
+        majority_type = "string"
+    return {
+        "path": id_col,
+        "majority_type": majority_type,
+        "max_len": None,
+        "n_docs": total_docs,
+    }
+
+
 def full_migration(
     spark: SparkSession,
     documents: DataFrame,
@@ -115,14 +138,23 @@ def full_migration(
     start = time.monotonic()
     report = MigrationReport(table_name, "FullMigration")
 
+    # The inference job also counts the sample, NULL and unparseable
+    # documents included, so NOT NULL needs no separate count job.
+    sampled = Observation()
+    sample = documents.limit(sample_size).observe(
+        sampled, F.count(F.lit(1)).alias("n")
+    )
     stats = [
         r.asDict()
-        for r in infer_schema(
-            documents, doc_col, id_col, sample_docs=sample_size
-        ).collect()
+        for r in infer_schema(sample, doc_col, id_col).collect()
     ]
-    n_sampled = documents.limit(sample_size).count()
-    plan = plan_tables(stats, table_name, primary_key=id_col, total_docs=n_sampled)
+    total_docs = sampled.get["n"]
+    plan = plan_tables(
+        stats + [_key_stats(documents, id_col, total_docs)],
+        table_name,
+        primary_key=id_col,
+        total_docs=total_docs,
+    )
 
     os.makedirs(output_dir, exist_ok=True)
     report.ddl_path = os.path.join(output_dir, f"schema_{table_name}.sql")
@@ -155,7 +187,7 @@ def full_migration(
     report.tables = {name: obs.get["n"] for name, obs in observed.items()}
 
     main_path = os.path.join(output_dir, f"{table_name}.parquet")
-    written_main = spark.read.parquet(main_path)
+    written_main = spark.read.schema(tables[table_name].schema).parquet(main_path)
     report.validation = (
         validation_verdict(
             tables[table_name],

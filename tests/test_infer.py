@@ -5,10 +5,15 @@ majority-vote type conflicts."""
 
 from __future__ import annotations
 
+import pytest
+
 from nosql_to_sql_migration_tool_spark.operators.infer import (
+    JSON_TYPES,
     explode_json_paths,
     infer_schema,
+    schema_stats,
 )
+from nosql_to_sql_migration_tool_spark.plans.audit import python_stage_count
 
 DOCS = [
     # flat fields (Analyze_scheme.Tests.ps1:43-56)
@@ -71,11 +76,32 @@ def test_schema_stats_goldens(spark):
 
 def test_majority_tie_breaks_deterministically(spark):
     df = spark.createDataFrame(
-        [(1, '{"x": 1}'), (2, '{"x": "a"}')], "doc_id long, doc string"
+        [
+            (1, '{"x": 1, "y": [true, null, 2, false, null]}'),
+            (2, '{"x": "a"}'),
+        ],
+        "doc_id long, doc string",
     )
     stats = {r.path: r for r in infer_schema(df, "doc", "doc_id").collect()}
     # 1-1 tie -> lexicographically largest type name wins (pinned rule)
     assert stats["x"].majority_type == "string"
+    # boolean 2, null 2, integer 1: the tie among the top counts only
+    assert stats["y[]"].majority_type == "null"
+
+
+def test_inference_walks_the_documents_once(spark):
+    # every consumer of the path stream shares one mapInPandas walk
+    assert python_stage_count(infer_schema(_docs_df(spark), "doc", "doc_id")) == 1
+
+
+def test_schema_stats_rejects_unknown_dtype(spark):
+    assert "datetime" not in JSON_TYPES
+    paths = spark.createDataFrame(
+        [(1, "x", "integer", None, "1"), (2, "x", "datetime", None, "t")],
+        "doc_id long, path string, dtype string, str_len int, sample string",
+    )
+    with pytest.raises(Exception, match="dtype outside"):
+        schema_stats(paths).collect()
 
 
 def test_sample_bound_limits_walk(spark):

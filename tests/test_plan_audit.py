@@ -15,6 +15,7 @@ from nosql_to_sql_migration_tool_spark.plans.audit import (
     plan_report,
     pushed_filters,
     python_stage_count,
+    python_stage_count_in,
     read_schemas,
     shuffle_count,
 )
@@ -87,6 +88,19 @@ def test_python_stage_detector(spark):
     py = df.mapInPandas(ident, "id long")
     assert python_stage_count(py) >= 1
     assert python_stage_count(df.selectExpr("id + 1")) == 0
+
+
+def test_python_stage_detector_counts_map_in_arrow(spark):
+    """Spark 4.1 prints a mapInArrow node as ``MapInArrow``, older
+    releases as ``PythonMapInArrow``: both count as Python stages."""
+    assert python_stage_count_in("+- MapInArrow (3)") == 1
+    assert python_stage_count_in("+- PythonMapInArrow (3)") == 1
+
+    def ident(it):
+        yield from it
+
+    df = spark.range(10).mapInArrow(ident, "id long")
+    assert python_stage_count(df) == 1
 
 
 def test_plan_report_shape(spark):

@@ -76,7 +76,6 @@ def test_full_surface_plan_invariants(spark):
         "infer_props_schema",
         "infer_ragged_schema",
         "sql_type_mapping",
-        "variant_doc_extract",
         "media_features",
         "media_resize",
         "media_ppm_decode_stats",
@@ -103,6 +102,9 @@ def test_full_surface_plan_invariants(spark):
         # worse). Same deliberate-Arrow class: linear, no shuffle
         # before it, columns pruned to (id, vec).
         "ingest_embedding_near_dup",
+        "embedding_near_dup",  # embedding_band_rows mapInArrow signatures
+        "embedding_lsh_recall_audit",  # embedding_band_rows, via the pair memo
+        "pq_topk_rerank",  # pq_encode mapInArrow subspace distances
     }
     offenders = []
     for name, fn in QUERIES.items():
@@ -117,6 +119,9 @@ def test_full_surface_plan_invariants(spark):
             offenders.append(f"{name}: global window x{rep['global_windows']}")
         if rep["python_stages"] and name not in sanctioned_python:
             offenders.append(f"{name}: python stages x{rep['python_stages']}")
+        if not rep["python_stages"] and name in sanctioned_python:
+            # a stale entry would silently sanction a future regression
+            offenders.append(f"{name}: sanctioned but runs no python stage")
     assert not offenders, offenders
 
 

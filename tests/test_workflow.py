@@ -137,11 +137,78 @@ def _settled_job_ids(spark) -> set[int]:
         time.sleep(0.3)
 
 
-# Jobs of one full_migration of the sf0.001 ragged fixture with its four
-# self-counting table writes and the one-pass validation verdict. The
-# sequential write-then-read-back-count loop and the two-branch verdict
-# ran 31.
-FULL_MIGRATION_JOB_CEILING = 16
+def _ddl_columns(ddl: str) -> dict[str, dict[str, str]]:
+    """table -> column -> the rest of its ANSI DDL line (type + flags)."""
+    tables: dict[str, dict[str, str]] = {}
+    for block in ddl.split("CREATE TABLE ")[1:]:
+        name, body = block.split(" (\n", 1)
+        tables[name] = {
+            line.split('"')[1]: line.split('" ', 1)[1].rstrip(",")
+            for line in body.split("\n")
+            if line.startswith('    "')
+        }
+    return tables
+
+
+def test_full_migration_ddl_declares_key_and_typed_fks(spark, tmp_path):
+    """The exported DDL loads as written: the main table declares the key
+    column, typed from the frame's key type, and every child table's FK
+    column carries that same type."""
+    docs = [
+        (1, '{"name": "a", "address": {"city": "x"}, "tags": ["t"]}'),
+        (2, '{"name": "b", "items": [{"sku": "s"}]}'),
+    ]
+    for key_type, sql in (("long", "INT"), ("string", "VARCHAR(255)")):
+        report = full_migration(
+            spark,
+            spark.createDataFrame(docs, f"doc_id {key_type}, doc string"),
+            "doc", "doc_id", "people", str(tmp_path / key_type),
+        )
+        ddl = _ddl_columns(open(report.ddl_path).read())
+        assert ddl["people"]["doc_id"] == f"{sql} PRIMARY KEY", key_type
+        children = set(ddl) - {"people"}
+        assert children == {"people_address", "people_tags", "people_items"}
+        for child in children:
+            assert ddl[child]["people_doc_id"] == f"{sql} NOT NULL", child
+
+
+def test_full_migration_not_null_counts_every_sampled_doc(spark, tmp_path):
+    """NOT NULL means present in every sampled document: the same flags
+    with the sample below or above the document count, and a NULL
+    document in the sample counts against every field."""
+    docs = [
+        (1, '{"name": "a", "age": 1}'),
+        (2, '{"name": "b"}'),
+        (3, '{"name": "c"}'),
+    ]
+
+    def main_columns(rows, sample_size, out):
+        report = full_migration(
+            spark,
+            spark.createDataFrame(rows, "doc_id long, doc string").coalesce(1),
+            "doc", "doc_id", "t", str(tmp_path / out),
+            sample_size=sample_size,
+        )
+        return _ddl_columns(open(report.ddl_path).read())["t"]
+
+    expected = {
+        "age": "INT",
+        "doc_id": "INT PRIMARY KEY",
+        "name": "VARCHAR(255) NOT NULL",
+    }
+    assert main_columns(docs, 2, "below") == expected
+    assert main_columns(docs, 100, "above") == expected
+    with_null = main_columns(docs + [(4, None)], 100, "null_doc")
+    assert with_null == {**expected, "name": "VARCHAR(255)"}
+
+
+# Jobs of one full_migration of the sf0.001 ragged fixture: one inference
+# job that also counts the sample, four self-counting table writes and the
+# one-pass validation verdict over the main table read with its known
+# schema. Two walks of the inference stream, a separate sample count and
+# an inferring read-back ran 16; the sequential write-then-read-back-count
+# loop and the two-branch verdict ran 31.
+FULL_MIGRATION_JOB_CEILING = 12
 
 
 def test_full_migration_job_ceiling(spark, tmp_path):
