@@ -21,6 +21,16 @@ round onto a partitioned parquet target is ``initial_load`` (first run)
 or ``sync_to_path`` (every later run); both ``workflow.py`` and the
 streaming analogue (foreachBatch upsert + checkpoint, availableNow
 trigger, ``streaming/cdc_stream.py``) call them.
+
+Like the reference's per-document metadata, the state those two write
+is ``(key, row_hash, partition)``. ``snapshot_diff`` carries every state
+column beyond key and hash as ``__old_<c>``, so a round's diff already
+knows each DELETED/UPDATED key's old partition: the diff's own
+checkpoint yields the touched partitions, and the target is read only
+in those directories. A two-column state (written by an older round)
+yields a diff without ``__old_<partition>``; that round takes the
+target-wide aggregate of ``apply_changes_to_path`` and writes a
+three-column state.
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ from functools import partial
 from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from nosql_to_sql_migration_tool_spark.functions.hashing import row_hash, scalar_columns
 from nosql_to_sql_migration_tool_spark.hadoop_fs import (
@@ -42,8 +53,14 @@ CHANGE_TYPES = ("NEW", "UPDATED", "DELETED", "UNCHANGED")
 
 
 def save_state(state: DataFrame, path: str) -> None:
-    """Persist the ``(key, row_hash)`` sync state between runs
-    (Save-SyncState, Sync.ps1:331-349)."""
+    """Persist the sync state between runs (Save-SyncState,
+    Sync.ps1:331-349): ``(key, row_hash)`` followed by any carried
+    columns, such as the partition column. Each file's rows are sorted
+    by the carried columns (a local sort, no extra job), so a partition
+    column encodes as a few runs instead of one value per row."""
+    carried = state.columns[2:]
+    if carried:
+        state = state.sortWithinPartitions(*carried)
     state.write.mode("overwrite").parquet(path)
 
 
@@ -64,11 +81,19 @@ def with_row_hash(
     return df.withColumn(hash_col, row_hash(df, cols))
 
 
-def snapshot_state(df: DataFrame, key: str, hash_col: str = "row_hash") -> DataFrame:
-    """Build the persisted sync state from a snapshot: ``(key, row_hash)``.
+def snapshot_state(
+    df: DataFrame,
+    key: str,
+    partition_col: str | None = None,
+    hash_col: str = "row_hash",
+) -> DataFrame:
+    """Build the persisted sync state from a snapshot: ``(key, row_hash)``,
+    plus ``partition_col`` when given, so that a later round knows each
+    key's partition without reading the target.
 
     Replaces the reference's DocumentHashes map (Sync.ps1:296-349)."""
-    return with_row_hash(df, hash_col=hash_col).select(key, hash_col)
+    carried = [partition_col] if partition_col else []
+    return with_row_hash(df, hash_col=hash_col).select(key, hash_col, *carried)
 
 
 def snapshot_diff(
@@ -81,12 +106,16 @@ def snapshot_diff(
     """Classify every key as NEW / UPDATED / DELETED / UNCHANGED.
 
     ``source`` is the current snapshot (full schema); ``state`` is the
-    persisted ``(key, row_hash)``. Returns all source columns + the key
-    (non-null even for DELETED rows) + ``change_type``.
+    persisted ``(key, row_hash, ...)``. Returns all source columns + the
+    key (non-null even for DELETED rows) + every other state column
+    ``c`` as ``__old_<c>`` (NULL for NEW rows) + ``change_type``.
     """
     src = with_row_hash(source, hash_col=hash_col).withColumnRenamed(key, f"__src_{key}")
+    carried = [c for c in state.columns if c not in (key, hash_col)]
     st = state.select(
-        F.col(key).alias(f"__st_{key}"), F.col(hash_col).alias(f"__st_{hash_col}")
+        F.col(key).alias(f"__st_{key}"),
+        F.col(hash_col).alias(f"__st_{hash_col}"),
+        *[F.col(c).alias(f"__old_{c}") for c in carried],
     )
     joined = src.join(
         st, src[f"__src_{key}"] == st[f"__st_{key}"], "full_outer"
@@ -102,6 +131,7 @@ def snapshot_diff(
         F.coalesce(F.col(f"__src_{key}"), F.col(f"__st_{key}")).alias(key),
         *data_cols,
         F.col(hash_col),
+        *[f"__old_{c}" for c in carried],
         change.alias(change_col),
     )
 
@@ -234,20 +264,135 @@ def _partition_dir_value(col: str):
     )
 
 
-def _delete_partitions(spark, target_path: str, partition_col: str, values) -> None:
-    """Remove the partition directories of ``values`` (unescaped directory
-    values). Spark percent-escapes partition values in paths (``x:y`` is
-    stored as ``p=x%3Ay``), so directories are matched by listing and
-    unescaping their names, never by formatting a path from the value."""
+def _round_aggregates(
+    diff: DataFrame, key: str, partition_col: str, change_col: str
+) -> list:
+    """What one pass over a diff tells its round: the rows per change
+    type, the NULL keys and — when the diff carries the state's
+    partition as ``__old_<partition_col>`` — the directory values of the
+    partitions it touches (arriving rows' new partitions, departing rows'
+    old ones)."""
+    change = F.col(change_col)
+    aggs = [F.count_if(change == t).alias(t) for t in CHANGE_TYPES]
+    aggs.append(F.count_if(F.col(key).isNull()).alias("__null_keys"))
+    old_part = f"__old_{partition_col}"
+    if old_part in diff.columns:
+        for name, kinds, col in (
+            ("__arriving", ("NEW", "UPDATED"), partition_col),
+            ("__departing", ("DELETED", "UPDATED"), old_part),
+        ):
+            aggs.append(
+                F.collect_set(
+                    F.when(change.isin(*kinds), _partition_dir_value(col))
+                ).alias(name)
+            )
+    return aggs
+
+
+def _checked_round(
+    seen: dict, key: str
+) -> tuple[dict[str, int], set[str] | None, int]:
+    """``(change counts, touched partition dirs, new row count)`` from a
+    diff's ``_round_aggregates``; the touched set is ``None`` when the
+    diff does not carry the old partition. A NULL key never matches in
+    the diff's join or the apply's anti-join, so every round would
+    insert its row again: refuse it before anything is written."""
+    if seen["__null_keys"]:
+        raise ValueError(
+            f"{seen['__null_keys']} source rows have a NULL key {key!r}; "
+            "a NULL key never matches the sync state or the target"
+        )
+    counts = {t: seen[t] for t in CHANGE_TYPES}
+    touched = (
+        set(seen["__arriving"]) | set(seen["__departing"])
+        if "__arriving" in seen
+        else None
+    )
+    return counts, touched, counts["NEW"] + counts["UPDATED"] + counts["UNCHANGED"]
+
+
+def _rewrite_partitions(
+    spark,
+    target_path: str,
+    diff: DataFrame,
+    key: str,
+    partition_col: str,
+    schema: StructType,
+    touched: set[str],
+    change_col: str,
+) -> int:
+    """Replace the partitions whose directory values are ``touched`` with
+    their new content: the rows read from exactly those directories minus
+    the DELETED/UPDATED keys, plus the NEW/UPDATED rows.
+
+    The directories are found by listing the target once and unescaping
+    the names: Spark percent-escapes partition values in paths (``x:y``
+    is stored as ``p=x%3Ay``), so a path is never formatted from a
+    value. They are read with the known ``schema`` and the target as
+    ``basePath``, so no partition discovery or footer-schema job runs
+    and no untouched partition is opened. The same job overwrites the
+    directories it reads: a dynamic overwrite stages its output and
+    swaps directories in only at job commit, after every read finished
+    (a static overwrite would delete the target before reading it).
+
+    Dynamic overwrite only replaces partitions PRESENT in the written
+    data — a partition whose every row was DELETED gets no output rows,
+    so its old directory would silently survive. Touched partitions that
+    received no output are therefore removed explicitly through the
+    Hadoop FileSystem API (works on any Hadoop-supported store).
+
+    Returns the rows written, which the write observes along with the
+    partitions it writes to."""
+    if not touched:
+        return 0
+    schema = StructType(
+        [f for f in schema if f.name != partition_col] + [schema[partition_col]]
+    )
     prefix = f"{partition_col}="
-    by_value = {
+    dir_names = {
         unquote(name[len(prefix):]): name
         for name in list_dirs(spark, target_path)
         if name.startswith(prefix)
     }
-    delete_paths(
-        spark, (f"{target_path}/{by_value[v]}" for v in values if v in by_value)
+    change = F.col(change_col)
+    rows = diff.filter(change.isin("NEW", "UPDATED")).select(*schema.names)
+    dirs = [f"{target_path}/{dir_names[v]}" for v in touched if v in dir_names]
+    if dirs:
+        gone = diff.filter(change.isin("DELETED", "UPDATED")).select(key)
+        # the changed keys are broadcast: their checkpoint carries no size
+        # estimate, so Spark would otherwise shuffle both sides
+        kept = (
+            spark.read.schema(schema)
+            .option("basePath", target_path)
+            .parquet(*dirs)
+            .join(F.broadcast(gone), key, "left_anti")
+        )
+        rows = kept.unionByName(rows)
+    written = Observation()
+    # One task per partition value writes one file per touched directory;
+    # without the shuffle every scan split reading a directory adds a file.
+    # Dynamic mode is pinned PER WRITE, not via session conf: a
+    # session-level set would flip every later overwrite in the session
+    # to dynamic (the rollup compaction's static overwrite then leaked
+    # stale batch_id dirs).
+    (
+        rows.repartition(partition_col)
+        .observe(
+            written,
+            F.count(F.lit(1)).alias("n"),
+            F.collect_set(_partition_dir_value(partition_col)).alias("dirs"),
+        )
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
     )
+    emptied = touched - set(written.get["dirs"])
+    if emptied:
+        delete_paths(
+            spark, (f"{target_path}/{dir_names[v]}" for v in emptied if v in dir_names)
+        )
+    return written.get["n"]
 
 
 def apply_changes_to_path(
@@ -262,36 +407,43 @@ def apply_changes_to_path(
     the target's new row count.
 
     Uses dynamic partition overwrite so only touched partition
-    directories are replaced (the reference's per-row DML, Sync.ps1:179-247,
-    becomes one scoped write). ``diff`` is read several times, so callers
-    pass it materialized (``sync_to_path`` checkpoints it once).
+    directories are read and replaced (the reference's per-row DML,
+    Sync.ps1:179-247, becomes one scoped write, ``_rewrite_partitions``).
+    ``diff`` is read several times, so callers pass it materialized
+    (``sync_to_path`` checkpoints it once). A production deployment on
+    object storage would use a transactional table format's MERGE
+    instead.
 
-    One target-side aggregate drives the apply: the target is scanned
-    once, projected to key and partition columns, left-joined to the
-    broadcast DELETED/UPDATED keys, unioned with the source-side
-    NEW/UPDATED partitions and grouped by partition. Its metadata-sized
-    result gives, per partition, the on-disk row count and whether a
-    change touches it. The rewrite then reads only the touched partitions
-    (a literal ``isin`` filter that Spark prunes at scan time); untouched
-    partitions are read once, key and partition columns only, and never
-    rewritten. The rewrite reads the directories it replaces in the same
-    job: a dynamic overwrite stages its output and swaps the partition
-    directories in only at job commit, after every read has finished (a
-    static overwrite deletes the target before the job reads it, so it
-    could not). A production deployment on object storage would use a
-    transactional table format's MERGE instead.
+    A diff against a three-column state carries each departing key's old
+    partition (``__old_<partition_col>``): one aggregate over the diff
+    gives the touched partitions and the new row count (the new state's
+    size, which mirrors the target), and the target is never scanned
+    beyond the touched directories.
 
-    Dynamic overwrite only replaces partitions PRESENT in the written
-    data — a partition whose every row was DELETED produces no output
-    rows, so its old directory would silently survive. Touched
-    partitions that received no output are therefore removed explicitly
-    through the Hadoop FileSystem API (works on any Hadoop-supported
-    store).
-
-    The returned count is the on-disk rows of untouched partitions plus
-    the rows written, which the write observes along with the partitions
-    it writes to — the target is never read back to be counted.
+    A diff without it (a two-column state) drives one target-side
+    aggregate instead: the target is scanned once, projected to key and
+    partition columns, left-joined to the broadcast DELETED/UPDATED
+    keys, unioned with the source-side NEW/UPDATED partitions and
+    grouped by partition directory. Its metadata-sized result gives, per
+    partition, the on-disk row count and whether a change touches it;
+    the count returned is untouched on-disk rows plus the rows written.
     """
+    if f"__old_{partition_col}" in diff.columns:
+        seen = diff.agg(*_round_aggregates(diff, key, partition_col, change_col))
+        _, touched, rows = _checked_round(seen.first().asDict(), key)
+        schema = StructType(
+            [
+                f
+                for f in diff.schema
+                if f.name not in (change_col, "row_hash")
+                and not f.name.startswith("__old_")
+            ]
+        )
+        _rewrite_partitions(
+            spark, target_path, diff, key, partition_col, schema, touched, change_col
+        )
+        return rows
+
     target = spark.read.parquet(target_path)
     change = F.col(change_col)
     gone = diff.filter(change.isin("DELETED", "UPDATED")).select(
@@ -306,53 +458,20 @@ def apply_changes_to_path(
             F.col("__gone").isNotNull().alias("__touched"),
         )
     )
-    arriving_rows = diff.filter(change.isin("NEW", "UPDATED"))
-    arriving = arriving_rows.select(
+    arriving = diff.filter(change.isin("NEW", "UPDATED")).select(
         partition_col, F.lit(0).alias("__rows"), F.lit(True).alias("__touched")
     )
     parts = (
         on_disk.unionByName(arriving)
-        .groupBy(partition_col, _partition_dir_value(partition_col).alias("__dir"))
+        .groupBy(_partition_dir_value(partition_col).alias("__dir"))
         .agg(F.sum("__rows").alias("__rows"), F.max("__touched").alias("__touched"))
         .collect()
     )
     untouched_rows = sum(r["__rows"] for r in parts if not r["__touched"])
-    touched = [r for r in parts if r["__touched"]]
-    if not touched:
-        return untouched_rows
-
-    values = [r[partition_col] for r in touched]
-    in_touched = F.col(partition_col).isin([v for v in values if v is not None])
-    if None in values:
-        in_touched = in_touched | F.col(partition_col).isNull()
-    # ``apply_changes`` on the touched partitions, with the changed keys
-    # broadcast: their checkpoint carries no size estimate, so Spark
-    # would otherwise shuffle both sides.
-    kept = target.filter(in_touched).join(F.broadcast(gone), key, "left_anti")
-    written = Observation()
-    # One task per partition value writes one file per touched directory;
-    # without the shuffle every scan split reading a directory adds a file.
-    # Dynamic mode is pinned PER WRITE, not via session conf: a
-    # session-level set would flip every later overwrite in the session
-    # to dynamic (the rollup compaction's static overwrite then leaked
-    # stale batch_id dirs).
-    (
-        kept.unionByName(arriving_rows.select(*target.columns))
-        .repartition(partition_col)
-        .observe(
-            written,
-            F.count(F.lit(1)).alias("n"),
-            F.collect_set(_partition_dir_value(partition_col)).alias("dirs"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(target_path)
+    touched = {r["__dir"] for r in parts if r["__touched"]}
+    return untouched_rows + _rewrite_partitions(
+        spark, target_path, diff, key, partition_col, target.schema, touched, change_col
     )
-    emptied = {r["__dir"] for r in touched} - set(written.get["dirs"])
-    if emptied:
-        _delete_partitions(spark, target_path, partition_col, emptied)
-    return untouched_rows + written.get["n"]
 
 
 def sync(
@@ -367,15 +486,19 @@ def sync(
     Sync.ps1:62-65). New state carries the source's hashes forward —
     the reference's carry-forward of unchanged hashes (Sync.ps1:250-256)
     is implicit because hashes are recomputed from the source snapshot.
+    The new state keeps the columns the old state carried beyond key and
+    hash (the partition column), with the source's current values.
     """
     if state is None:
         diff = with_row_hash(source, hash_col=hash_col).withColumn(
             "change_type", F.lit("NEW")
         )
+        carried = []
     else:
         diff = snapshot_diff(source, state, key, hash_col=hash_col)
+        carried = [c for c in state.columns if c not in (key, hash_col)]
     new_state = (
-        diff.filter(F.col("change_type") != "DELETED").select(key, hash_col)
+        diff.filter(F.col("change_type") != "DELETED").select(key, hash_col, *carried)
     )
     return diff, new_state
 
@@ -397,20 +520,35 @@ def initial_load(
     state_path: str,
     partition_col: str,
 ) -> int:
-    """First sync round: write the partitioned target and seed the state
-    from the same snapshot; returns the rows written. The two writes go
-    to disjoint paths and run concurrently. The target write counts its
-    own rows, so the target is never read back to be counted."""
-    loaded = Observation()
-    run_concurrent(
-        partial(
-            source.observe(loaded, F.count(F.lit(1)).alias("n"))
-            .write.partitionBy(partition_col)
-            .parquet,
-            target_path,
-        ),
-        partial(save_state, snapshot_state(source, key), state_path),
+    """First sync round: write the partitioned target and seed the
+    ``(key, row_hash, partition)`` state from the same snapshot; returns
+    the rows written. The two writes go to disjoint paths and run
+    concurrently. The target write counts its own rows, so the target is
+    never read back to be counted. A NULL key fails both writes: it
+    would never match the state, so every later round would insert it
+    again. A failed load removes what it left behind, so that the next
+    run is a first round again."""
+    keyed = source.withColumn(
+        key,
+        F.when(
+            F.col(key).isNull(),
+            F.raise_error(F.lit(f"initial_load: NULL key {key!r} in the source")),
+        ).otherwise(F.col(key)),
     )
+    loaded = Observation()
+    try:
+        run_concurrent(
+            partial(
+                keyed.observe(loaded, F.count(F.lit(1)).alias("n"))
+                .write.partitionBy(partition_col)
+                .parquet,
+                target_path,
+            ),
+            partial(save_state, snapshot_state(keyed, key, partition_col), state_path),
+        )
+    except Exception:
+        delete_paths(spark, (target_path, state_path))
+        raise
     return loaded.get["n"]
 
 
@@ -426,28 +564,46 @@ def sync_to_path(
     target: ``({change_type: rows}, new target row count)``.
 
     The hash diff is evaluated exactly once, by one eager
-    ``localCheckpoint``. That job also observes the change counts; the
-    apply (``apply_changes_to_path``) and the new state
-    (``change_type != DELETED``) read the materialization. The apply
-    commits before the state is saved, so a failed apply leaves the old
-    state to re-diff against.
+    ``localCheckpoint``. That job also observes the change counts, the
+    NULL keys (which fail the round before anything is written) and, as
+    the state carries each key's partition, the touched partition
+    directories. The apply reads only those directories
+    (``_rewrite_partitions``), and the new state (``change_type !=
+    DELETED``, with the source's partition values) reads the
+    materialization. The new row count is that state's size, which
+    mirrors the target. The apply commits before the state is saved, so
+    a failed apply leaves the old state to re-diff against.
 
-    A kept target whose state is missing gets its state rebuilt from the
-    target snapshot: classifying every source row NEW would union them
-    onto the target and duplicate every key.
+    A two-column state from an older round goes through
+    ``apply_changes_to_path``'s target-wide aggregate once, and the
+    round then writes a three-column state. A kept target whose state is
+    missing gets its state rebuilt from the target snapshot: classifying
+    every source row NEW would union them onto the target and duplicate
+    every key.
     """
     state = load_state(spark, state_path)
     if state is None:
-        state = snapshot_state(spark.read.parquet(target_path), key)
+        state = snapshot_state(spark.read.parquet(target_path), key, partition_col)
     diff, _ = sync(source, state, key)
-    change = F.col("change_type")
-    counted = Observation()
+    seen = Observation()
     diff = diff.observe(
-        counted, *[F.count_if(change == t).alias(t) for t in CHANGE_TYPES]
+        seen, *_round_aggregates(diff, key, partition_col, "change_type")
     ).localCheckpoint(eager=True)
-    rows = apply_changes_to_path(spark, target_path, diff, key, partition_col)
-    save_state(diff.filter(change != "DELETED").select(key, "row_hash"), state_path)
-    return {t: n for t, n in counted.get.items() if n}, rows
+    counts, touched, rows = _checked_round(seen.get, key)
+    if touched is None:
+        rows = apply_changes_to_path(spark, target_path, diff, key, partition_col)
+    else:
+        _rewrite_partitions(
+            spark, target_path, diff, key, partition_col, source.schema, touched,
+            "change_type",
+        )
+    save_state(
+        diff.filter(F.col("change_type") != "DELETED").select(
+            key, "row_hash", partition_col
+        ),
+        state_path,
+    )
+    return {t: n for t, n in counts.items() if n}, rows
 
 
 def maintain_aggregate(

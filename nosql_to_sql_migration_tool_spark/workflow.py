@@ -29,15 +29,18 @@ compares it in a single sample join + aggregate
 Job structure of an ``incremental_migration`` sync round, bound by
 driver latency the same way (``operators/cdc.sync_to_path``): the state
 read, ONE eager checkpoint of the hash diff that also observes the
-change counts, the target's partition discovery, ONE metadata-sized
-aggregate over the target's key and partition columns giving each
-partition's on-disk row count and whether a change touches it, ONE
-dynamic-overwrite rewrite of only the touched partitions that counts
-its own rows, and the state write. The reported target count is the
-untouched partitions' on-disk rows plus the rows written, so the target
-is listed once per round and never read back to be counted. The first
-round writes the target and the seeded state concurrently, the target
-write counting its own rows.
+change counts, the NULL keys and — because the state is ``(key,
+row_hash, partition)`` — the touched partition directories, then ONE
+dynamic-overwrite rewrite that reads and replaces only those
+directories, and the state write: 8 jobs on the sf0.001 customer
+fixture. No job scans an untouched partition, and the reported target
+count is the new state's size, so the target is never read back to be
+counted. A two-column state from an older round costs that round one
+target-wide aggregate instead, and is then rewritten with the
+partition. The first round writes the target and the seeded
+three-column state concurrently, the target write counting its own
+rows; a NULL key fails it (and any later round) before anything
+commits.
 """
 
 from __future__ import annotations

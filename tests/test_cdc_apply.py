@@ -44,6 +44,9 @@ def test_apply_roundtrip_and_state_persistence(spark, tmp_path):
     assert state is not None and state.columns == ["c_custkey", "row_hash"]
 
     diff, new_state = sync(source, state, "c_custkey")
+    # a two-column state carries nothing into the diff or the new state
+    assert diff.columns == [*source.columns, "row_hash", "change_type"]
+    assert new_state.columns == ["c_custkey", "row_hash"]
     applied = apply_changes(customer, diff, "c_custkey")
     assert _same_rows(applied, source)
 
@@ -133,6 +136,40 @@ def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
         "k long, p string, v string",
     )
     diff, _ = sync(source, snapshot_state(target, "k"), "k")
+    n = apply_changes_to_path(spark, target_path, diff, "k", "p")
+
+    assert sorted(d for d in os.listdir(target_path) if d.startswith("p=")) == [
+        "p=a%2Fb", "p=plain",
+    ]
+    result = spark.read.parquet(target_path).select(*source.columns)
+    assert n == result.count() == 3
+    assert _same_rows(result, source)
+
+
+def test_apply_with_partition_carrying_state(spark, tmp_path):
+    """A diff against a ``(key, row_hash, partition)`` state carries each
+    departing key's old partition as ``__old_<p>``; applying it reads
+    only the touched directories, still removes emptied partitions with
+    escaped names, and returns the count that matches disk. The new
+    state keeps the partition column with the source's values."""
+    target = spark.createDataFrame(
+        [(1, "x:y", "a"), (2, "x:y", "b"), (3, "a/b", "c"), (4, None, "d"),
+         (5, "plain", "e"), (6, "a/b", "f")],
+        "k long, p string, v string",
+    )
+    target_path = str(tmp_path / "tgt")
+    target.write.partitionBy("p").parquet(target_path)
+    source = spark.createDataFrame(
+        [(3, "plain", "c"), (5, "plain", "e"), (6, "a/b", "f")],
+        "k long, p string, v string",
+    )
+    state = snapshot_state(target, "k", "p")
+    assert state.columns == ["k", "row_hash", "p"]
+    diff, new_state = sync(source, state, "k")
+    assert "__old_p" in diff.columns
+    assert sorted(new_state.select("k", "p").collect()) == sorted(
+        source.select("k", "p").collect()
+    )
     n = apply_changes_to_path(spark, target_path, diff, "k", "p")
 
     assert sorted(d for d in os.listdir(target_path) if d.startswith("p=")) == [

@@ -5,13 +5,20 @@ written store (Invoke-IncrementalMigration parity)."""
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from nosql_to_sql_migration_tool_spark.fixtures import (
     changed_customer_source,
     ragged_documents,
+)
+from nosql_to_sql_migration_tool_spark.operators.cdc import (
+    load_state,
+    save_state,
+    snapshot_state,
 )
 from nosql_to_sql_migration_tool_spark.operators.infer import (
     explode_json_paths,
@@ -306,7 +313,11 @@ def test_incremental_migration_rebuilds_lost_state(spark, tmp_path):
     got = target.select(*changed.columns)
     assert got.exceptAll(changed).count() == 0
     assert changed.exceptAll(got).count() == 0
-    # the rebuilt state is persisted, so the next round is a no-op
+    # the rebuilt state carries the partition and is persisted, so the
+    # next round is a no-op
+    assert load_state(spark, str(out / "sync_state_customer")).columns == [
+        "c_custkey", "row_hash", "c_nationkey",
+    ]
     again = incremental_migration(
         spark, changed, "c_custkey", "customer", str(out), "c_nationkey"
     )
@@ -360,12 +371,13 @@ def test_incremental_migration_counts_match_disk_over_rounds(spark, tmp_path):
 
 
 # Jobs of one warm incremental_migration sync round on the sf0.001
-# customer fixture: the state and target reads, one diff checkpoint that
-# also counts the changes, one target aggregate, one rewrite of the
-# touched partitions that counts its own rows, and the state write. The
-# round that evaluated the lazy diff four times and read the target back
-# to count it ran 30.
-INCREMENTAL_SYNC_JOB_CEILING = 12
+# customer fixture: the state read, one diff checkpoint that also counts
+# the changes and names the touched partitions, one rewrite that reads
+# and replaces only the touched partitions, and the state write. The
+# round that scanned every target partition to find the touched ones ran
+# 12; the one that also evaluated the lazy diff four times and read the
+# target back to count it ran 30.
+INCREMENTAL_SYNC_JOB_CEILING = 8
 
 
 def test_incremental_sync_job_ceiling(spark, tmp_path):
@@ -388,6 +400,120 @@ def test_incremental_sync_job_ceiling(spark, tmp_path):
     assert report.operation == "IncrementalSync"
     assert set(report.validation) == {"NEW", "UPDATED", "DELETED", "UNCHANGED"}
     assert jobs <= INCREMENTAL_SYNC_JOB_CEILING, jobs
+
+
+def test_incremental_sync_never_reads_untouched_partitions(spark, tmp_path):
+    """The sync state carries each key's partition, so a round reads only
+    the partitions its changes touch: with an untouched partition's files
+    unreadable, a round that changes one row of another partition still
+    succeeds, reports the right count and leaves that partition equal to
+    the source."""
+    customer = load_table(spark, SF_DIR_SMOKE, "customer")
+    out = str(tmp_path / "scoped")
+    target_path = f"{out}/customer.parquet"
+    incremental_migration(
+        spark, customer, "c_custkey", "customer", out, "c_nationkey"
+    )
+    garbled = glob.glob(f"{target_path}/c_nationkey=5/part-*")
+    assert garbled
+    for path in garbled:
+        with open(path, "wb") as fh:
+            fh.write(b"not a parquet file")
+
+    key = customer.filter(F.col("c_nationkey") == 1).first()["c_custkey"]
+    source = customer.withColumn(
+        "c_name",
+        F.when(F.col("c_custkey") == key, F.lit("renamed")).otherwise(
+            F.col("c_name")
+        ),
+    )
+    report = incremental_migration(
+        spark, source, "c_custkey", "customer", out, "c_nationkey"
+    )
+    rows = customer.count()
+    assert report.validation == {"UPDATED": 1, "UNCHANGED": rows - 1}
+    assert report.tables["customer"] == rows
+    want = source.filter(F.col("c_nationkey") == 1).drop("c_nationkey")
+    got = spark.read.parquet(f"{target_path}/c_nationkey=1").select(*want.columns)
+    assert got.exceptAll(want).isEmpty()
+    assert want.exceptAll(got).isEmpty()
+
+
+def test_incremental_migration_upgrades_two_column_state(spark, tmp_path):
+    """A ``(key, row_hash)`` state written by an older round is never
+    misread: its round goes through the target-wide aggregate, leaves
+    the target equal to the source and persists a three-column state,
+    so the next round takes the partition-scoped path."""
+    customer = load_table(spark, SF_DIR_SMOKE, "customer")
+    out = str(tmp_path / "legacy")
+    target_path = f"{out}/customer.parquet"
+    state_path = f"{out}/sync_state_customer"
+
+    def sync_round(source):
+        return incremental_migration(
+            spark, source, "c_custkey", "customer", out, "c_nationkey"
+        )
+
+    def assert_target_is(source, report):
+        on_disk = spark.read.parquet(target_path)
+        assert report.tables["customer"] == on_disk.count() == source.count()
+        got = on_disk.select(*source.columns)
+        assert got.exceptAll(source).isEmpty()
+        assert source.exceptAll(got).isEmpty()
+
+    sync_round(customer)
+    save_state(
+        snapshot_state(spark.read.parquet(target_path), "c_custkey"), state_path
+    )
+    assert load_state(spark, state_path).columns == ["c_custkey", "row_hash"]
+
+    changed = changed_customer_source(customer)
+    report = sync_round(changed)
+    assert set(report.validation) == {"NEW", "UPDATED", "DELETED", "UNCHANGED"}
+    assert_target_is(changed, report)
+    assert load_state(spark, state_path).columns == [
+        "c_custkey", "row_hash", "c_nationkey",
+    ]
+
+    before = _settled_job_ids(spark)
+    report = sync_round(customer)
+    jobs = len(_settled_job_ids(spark) - before)
+    assert set(report.validation) == {"NEW", "UPDATED", "DELETED", "UNCHANGED"}
+    assert jobs <= INCREMENTAL_SYNC_JOB_CEILING, jobs
+    assert_target_is(customer, report)
+
+
+def test_incremental_migration_rejects_null_keys(spark, tmp_path):
+    """A NULL key never matches in the diff's full-outer join or the
+    apply's anti-join, so every round would insert its row again (three
+    rounds left six NULL-key rows). The initial load refuses it and
+    leaves nothing behind, and a sync round refuses it before writing,
+    leaving the target and the state as they were."""
+    schema = "k long, v string, p int"
+    with_null = spark.createDataFrame(
+        [(1, "a", 1), (None, "b", 1), (3, "c", 2)], schema
+    )
+    out = str(tmp_path / "nulls")
+    with pytest.raises(Exception, match="NULL key"):
+        incremental_migration(spark, with_null, "k", "t", out, "p")
+
+    first = incremental_migration(
+        spark, spark.createDataFrame([(1, "a", 1), (3, "c", 2)], schema),
+        "k", "t", out, "p",
+    )
+    assert first.operation == "InitialLoad"
+    assert first.tables == {"t": 2}
+
+    def on_disk():
+        return (
+            sorted(spark.read.parquet(f"{out}/t.parquet").collect()),
+            sorted(load_state(spark, f"{out}/sync_state_t").collect()),
+        )
+
+    before = on_disk()
+    with pytest.raises(ValueError, match="NULL key"):
+        incremental_migration(spark, with_null, "k", "t", out, "p")
+    assert on_disk() == before
 
 
 def test_clean_corpus_pipeline(spark):
