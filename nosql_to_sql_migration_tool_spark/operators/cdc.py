@@ -27,10 +27,10 @@ is ``(key, row_hash, partition)``. ``snapshot_diff`` carries every state
 column beyond key and hash as ``__old_<c>``, so a round's diff already
 knows each DELETED/UPDATED key's old partition: the diff's own
 checkpoint yields the touched partitions, and the target is read only
-in those directories. A two-column state (written by an older round)
-yields a diff without ``__old_<partition>``; that round takes the
-target-wide aggregate of ``apply_changes_to_path`` and writes a
-three-column state.
+in those directories. A state that is missing, or lacks the partition
+column (a ``(key, row_hash)`` state from an older round), is rebuilt
+from the target read with the source's schema, so every diff carries
+``__old_<partition>``.
 """
 
 from __future__ import annotations
@@ -268,46 +268,42 @@ def _round_aggregates(
     diff: DataFrame, key: str, partition_col: str, change_col: str
 ) -> list:
     """What one pass over a diff tells its round: the rows per change
-    type, the NULL keys and — when the diff carries the state's
-    partition as ``__old_<partition_col>`` — the directory values of the
-    partitions it touches (arriving rows' new partitions, departing rows'
-    old ones)."""
+    type, the NULL keys and the directory values of the partitions it
+    touches (arriving rows' new partitions, departing rows' old ones,
+    which the diff carries as ``__old_<partition_col>``)."""
+    old_part = f"__old_{partition_col}"
+    if old_part not in diff.columns:
+        raise ValueError(
+            f"the diff has no {old_part!r} column: diff against a state "
+            f"built with snapshot_state(..., {partition_col!r})"
+        )
     change = F.col(change_col)
     aggs = [F.count_if(change == t).alias(t) for t in CHANGE_TYPES]
     aggs.append(F.count_if(F.col(key).isNull()).alias("__null_keys"))
-    old_part = f"__old_{partition_col}"
-    if old_part in diff.columns:
-        for name, kinds, col in (
-            ("__arriving", ("NEW", "UPDATED"), partition_col),
-            ("__departing", ("DELETED", "UPDATED"), old_part),
-        ):
-            aggs.append(
-                F.collect_set(
-                    F.when(change.isin(*kinds), _partition_dir_value(col))
-                ).alias(name)
-            )
+    for name, kinds, col in (
+        ("__arriving", ("NEW", "UPDATED"), partition_col),
+        ("__departing", ("DELETED", "UPDATED"), old_part),
+    ):
+        aggs.append(
+            F.collect_set(
+                F.when(change.isin(*kinds), _partition_dir_value(col))
+            ).alias(name)
+        )
     return aggs
 
 
-def _checked_round(
-    seen: dict, key: str
-) -> tuple[dict[str, int], set[str] | None, int]:
+def _checked_round(seen: dict, key: str) -> tuple[dict[str, int], set[str], int]:
     """``(change counts, touched partition dirs, new row count)`` from a
-    diff's ``_round_aggregates``; the touched set is ``None`` when the
-    diff does not carry the old partition. A NULL key never matches in
-    the diff's join or the apply's anti-join, so every round would
-    insert its row again: refuse it before anything is written."""
+    diff's ``_round_aggregates``. A NULL key never matches in the diff's
+    join or the apply's anti-join, so every round would insert its row
+    again: refuse it before anything is written."""
     if seen["__null_keys"]:
         raise ValueError(
             f"{seen['__null_keys']} source rows have a NULL key {key!r}; "
             "a NULL key never matches the sync state or the target"
         )
     counts = {t: seen[t] for t in CHANGE_TYPES}
-    touched = (
-        set(seen["__arriving"]) | set(seen["__departing"])
-        if "__arriving" in seen
-        else None
-    )
+    touched = set(seen["__arriving"]) | set(seen["__departing"])
     return counts, touched, counts["NEW"] + counts["UPDATED"] + counts["UNCHANGED"]
 
 
@@ -320,7 +316,7 @@ def _rewrite_partitions(
     schema: StructType,
     touched: set[str],
     change_col: str,
-) -> int:
+) -> None:
     """Replace the partitions whose directory values are ``touched`` with
     their new content: the rows read from exactly those directories minus
     the DELETED/UPDATED keys, plus the NEW/UPDATED rows.
@@ -339,12 +335,10 @@ def _rewrite_partitions(
     data — a partition whose every row was DELETED gets no output rows,
     so its old directory would silently survive. Touched partitions that
     received no output are therefore removed explicitly through the
-    Hadoop FileSystem API (works on any Hadoop-supported store).
-
-    Returns the rows written, which the write observes along with the
-    partitions it writes to."""
+    Hadoop FileSystem API (works on any Hadoop-supported store): the
+    write observes the partitions it writes to."""
     if not touched:
-        return 0
+        return
     schema = StructType(
         [f for f in schema if f.name != partition_col] + [schema[partition_col]]
     )
@@ -379,7 +373,6 @@ def _rewrite_partitions(
         rows.repartition(partition_col)
         .observe(
             written,
-            F.count(F.lit(1)).alias("n"),
             F.collect_set(_partition_dir_value(partition_col)).alias("dirs"),
         )
         .write.mode("overwrite")
@@ -392,7 +385,6 @@ def _rewrite_partitions(
         delete_paths(
             spark, (f"{target_path}/{dir_names[v]}" for v in emptied if v in dir_names)
         )
-    return written.get["n"]
 
 
 def apply_changes_to_path(
@@ -410,68 +402,29 @@ def apply_changes_to_path(
     directories are read and replaced (the reference's per-row DML,
     Sync.ps1:179-247, becomes one scoped write, ``_rewrite_partitions``).
     ``diff`` is read several times, so callers pass it materialized
-    (``sync_to_path`` checkpoints it once). A production deployment on
-    object storage would use a transactional table format's MERGE
-    instead.
-
-    A diff against a three-column state carries each departing key's old
-    partition (``__old_<partition_col>``): one aggregate over the diff
-    gives the touched partitions and the new row count (the new state's
-    size, which mirrors the target), and the target is never scanned
-    beyond the touched directories.
-
-    A diff without it (a two-column state) drives one target-side
-    aggregate instead: the target is scanned once, projected to key and
-    partition columns, left-joined to the broadcast DELETED/UPDATED
-    keys, unioned with the source-side NEW/UPDATED partitions and
-    grouped by partition directory. Its metadata-sized result gives, per
-    partition, the on-disk row count and whether a change touches it;
-    the count returned is untouched on-disk rows plus the rows written.
+    (``sync_to_path`` checkpoints it once). It must come from a state
+    that carries the partition: each departing key's old partition
+    (``__old_<partition_col>``) lets one aggregate over the diff give the
+    touched partitions and the new row count (the new state's size,
+    which mirrors the target), so the target is never scanned beyond the
+    touched directories; a diff without it raises ``ValueError``. A
+    production deployment on object storage would use a transactional
+    table format's MERGE instead.
     """
-    if f"__old_{partition_col}" in diff.columns:
-        seen = diff.agg(*_round_aggregates(diff, key, partition_col, change_col))
-        _, touched, rows = _checked_round(seen.first().asDict(), key)
-        schema = StructType(
-            [
-                f
-                for f in diff.schema
-                if f.name not in (change_col, "row_hash")
-                and not f.name.startswith("__old_")
-            ]
-        )
-        _rewrite_partitions(
-            spark, target_path, diff, key, partition_col, schema, touched, change_col
-        )
-        return rows
-
-    target = spark.read.parquet(target_path)
-    change = F.col(change_col)
-    gone = diff.filter(change.isin("DELETED", "UPDATED")).select(
-        key, F.lit(True).alias("__gone")
+    seen = diff.agg(*_round_aggregates(diff, key, partition_col, change_col))
+    _, touched, rows = _checked_round(seen.first().asDict(), key)
+    schema = StructType(
+        [
+            f
+            for f in diff.schema
+            if f.name not in (change_col, "row_hash")
+            and not f.name.startswith("__old_")
+        ]
     )
-    on_disk = (
-        target.select(key, partition_col)
-        .join(F.broadcast(gone), key, "left")
-        .select(
-            partition_col,
-            F.lit(1).alias("__rows"),
-            F.col("__gone").isNotNull().alias("__touched"),
-        )
+    _rewrite_partitions(
+        spark, target_path, diff, key, partition_col, schema, touched, change_col
     )
-    arriving = diff.filter(change.isin("NEW", "UPDATED")).select(
-        partition_col, F.lit(0).alias("__rows"), F.lit(True).alias("__touched")
-    )
-    parts = (
-        on_disk.unionByName(arriving)
-        .groupBy(_partition_dir_value(partition_col).alias("__dir"))
-        .agg(F.sum("__rows").alias("__rows"), F.max("__touched").alias("__touched"))
-        .collect()
-    )
-    untouched_rows = sum(r["__rows"] for r in parts if not r["__touched"])
-    touched = {r["__dir"] for r in parts if r["__touched"]}
-    return untouched_rows + _rewrite_partitions(
-        spark, target_path, diff, key, partition_col, target.schema, touched, change_col
-    )
+    return rows
 
 
 def sync(
@@ -574,29 +527,27 @@ def sync_to_path(
     mirrors the target. The apply commits before the state is saved, so
     a failed apply leaves the old state to re-diff against.
 
-    A two-column state from an older round goes through
-    ``apply_changes_to_path``'s target-wide aggregate once, and the
-    round then writes a three-column state. A kept target whose state is
-    missing gets its state rebuilt from the target snapshot: classifying
-    every source row NEW would union them onto the target and duplicate
-    every key.
+    A state that is missing, or lacks the partition column (a two-column
+    state from an older round), is rebuilt from the target snapshot: with
+    no state every source row would classify NEW and be unioned onto the
+    target, duplicating every key. The target is read with the source's
+    schema, as inferred partition types (``"01"`` read as ``1``) would
+    change every row's hash and partition directory.
     """
     state = load_state(spark, state_path)
-    if state is None:
-        state = snapshot_state(spark.read.parquet(target_path), key, partition_col)
+    if state is None or partition_col not in state.columns:
+        target = spark.read.schema(source.schema).parquet(target_path)
+        state = snapshot_state(target, key, partition_col)
     diff, _ = sync(source, state, key)
     seen = Observation()
     diff = diff.observe(
         seen, *_round_aggregates(diff, key, partition_col, "change_type")
     ).localCheckpoint(eager=True)
     counts, touched, rows = _checked_round(seen.get, key)
-    if touched is None:
-        rows = apply_changes_to_path(spark, target_path, diff, key, partition_col)
-    else:
-        _rewrite_partitions(
-            spark, target_path, diff, key, partition_col, source.schema, touched,
-            "change_type",
-        )
+    _rewrite_partitions(
+        spark, target_path, diff, key, partition_col, source.schema, touched,
+        "change_type",
+    )
     save_state(
         diff.filter(F.col("change_type") != "DELETED").select(
             key, "row_hash", partition_col

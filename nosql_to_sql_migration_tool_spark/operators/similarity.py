@@ -1078,20 +1078,6 @@ def semantic_near_dup_sql(
     )
 
 
-def _plane_lit(plane: list[float]) -> Column:
-    return F.array(*[F.lit(c) for c in plane])
-
-
-def lsh_bits(vec: Column, planes: list[list[float]] | None = None) -> Column:
-    """Bit signature: sign of the dot with each hyperplane."""
-    planes = planes if planes is not None else hyperplanes()
-    bits = [
-        F.when(dot(vec, _plane_lit(p)) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for p in planes
-    ]
-    return F.concat(*bits)
-
-
 def lsh_bits_sql(vec_expr: str, planes: list[list[float]] | None = None) -> str:
     planes = planes if planes is not None else hyperplanes()
     bits = []
@@ -1135,7 +1121,8 @@ def embedding_near_dup(
     # derives the signature subtree on BOTH sides, so the interpreted
     # fold used to run twice per vector (A/B: 2.6 -> 1.1 s on the
     # memoized pair build, hash-identical; the kernel replays the
-    # fold's IEEE addition order bit-for-bit, tools/probes_r16).
+    # fold's IEEE addition order bit-for-bit, OPTIMIZATION_r16.md
+    # "Embedding family").
     bands = embedding_band_rows(
         df, vec_col=vec_col, id_col=id_col, band_chars=band_chars
     ).select(id_col, "band_idx", "band_val")
@@ -1448,7 +1435,7 @@ def sampled_truth_pairs(
     # product — the corpus row's self-norm folds once below the join
     # and each sample vector's once at broadcast build, so the product
     # evaluates ONE dot fold per pair instead of 3 (A/B 2.2 -> 1.1 s,
-    # hash-identical, tools/probes_r16/probe_emb_s3.py).
+    # hash-identical, OPTIMIZATION_r16.md "Embedding family").
     base = df.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("__v")
     ).withColumn("__n", _norm(F.col("__v")))

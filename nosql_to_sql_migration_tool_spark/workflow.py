@@ -35,9 +35,9 @@ dynamic-overwrite rewrite that reads and replaces only those
 directories, and the state write: 8 jobs on the sf0.001 customer
 fixture. No job scans an untouched partition, and the reported target
 count is the new state's size, so the target is never read back to be
-counted. A two-column state from an older round costs that round one
-target-wide aggregate instead, and is then rewritten with the
-partition. The first round writes the target and the seeded
+counted. A state that is missing, or lacks the partition column (a
+two-column state from an older round), is rebuilt from the target read
+with the source's schema. The first round writes the target and the seeded
 three-column state concurrently, the target write counting its own
 rows; a NULL key fails it (and any later round) before anything
 commits.
@@ -280,9 +280,9 @@ def incremental_migration(
     """Typed-source incremental sync: first run loads the target and
     seeds the state; later runs hash-diff against persisted state and
     apply only touched partitions (Invoke-IncrementalMigration branch +
-    Start-IncrementalSync). A kept target whose state is missing gets
-    its state rebuilt from the target snapshot, so the round still
-    classifies against what is on disk."""
+    Start-IncrementalSync). A kept target whose state is missing or
+    lacks the partition column gets its state rebuilt from the target
+    snapshot, so the round still classifies against what is on disk."""
     start = time.monotonic()
     target_path = os.path.join(output_dir, f"{table_name}.parquet")
     state_path = os.path.join(output_dir, f"sync_state_{table_name}")

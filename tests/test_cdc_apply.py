@@ -73,7 +73,7 @@ def test_partition_scoped_apply_touches_only_changed_dirs(spark, tmp_path):
             before[d] = sorted(os.listdir(full))
 
     source = regional_changed_customer_source(customer)
-    state = snapshot_state(customer, "c_custkey")
+    state = snapshot_state(customer, "c_custkey", "c_nationkey")
     diff, _ = sync(source, state, "c_custkey")
     apply_changes_to_path(spark, target_path, diff, "c_custkey", "c_nationkey")
 
@@ -104,7 +104,7 @@ def test_apply_removes_fully_deleted_partition_dir(spark, tmp_path):
 
     # source = customer minus ALL of nation 3 → every nation-3 row DELETED
     source = customer.filter(F.col("c_nationkey") != 3)
-    state = snapshot_state(customer, "c_custkey")
+    state = snapshot_state(customer, "c_custkey", "c_nationkey")
     diff, _ = sync(source, state, "c_custkey")
     apply_changes_to_path(spark, target_path, diff, "c_custkey", "c_nationkey")
 
@@ -116,8 +116,12 @@ def test_apply_removes_fully_deleted_partition_dir(spark, tmp_path):
 def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
     """Spark percent-escapes partition values in directory names (``x:y``
     is stored as ``p=x%3Ay``, ``a/b`` as ``p=a%2Fb``) and writes NULL to
-    the hive default partition. Emptying such partitions must still
-    remove their directories, and the returned count must match disk."""
+    the hive default partition. A diff against a ``(key, row_hash,
+    partition)`` state carries each departing key's old partition as
+    ``__old_<p>``; applying it reads only the touched directories, still
+    removes emptied partitions with such names, and returns the count
+    that matches disk. The new state keeps the partition column with the
+    source's values. A diff against a two-column state is refused."""
     target = spark.createDataFrame(
         [(1, "x:y", "a"), (2, "x:y", "b"), (3, "a/b", "c"), (4, None, "d"),
          (5, "plain", "e"), (6, "a/b", "f")],
@@ -135,34 +139,10 @@ def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
         [(3, "plain", "c"), (5, "plain", "e"), (6, "a/b", "f")],
         "k long, p string, v string",
     )
-    diff, _ = sync(source, snapshot_state(target, "k"), "k")
-    n = apply_changes_to_path(spark, target_path, diff, "k", "p")
+    two_column, _ = sync(source, snapshot_state(target, "k"), "k")
+    with pytest.raises(ValueError, match="__old_p"):
+        apply_changes_to_path(spark, target_path, two_column, "k", "p")
 
-    assert sorted(d for d in os.listdir(target_path) if d.startswith("p=")) == [
-        "p=a%2Fb", "p=plain",
-    ]
-    result = spark.read.parquet(target_path).select(*source.columns)
-    assert n == result.count() == 3
-    assert _same_rows(result, source)
-
-
-def test_apply_with_partition_carrying_state(spark, tmp_path):
-    """A diff against a ``(key, row_hash, partition)`` state carries each
-    departing key's old partition as ``__old_<p>``; applying it reads
-    only the touched directories, still removes emptied partitions with
-    escaped names, and returns the count that matches disk. The new
-    state keeps the partition column with the source's values."""
-    target = spark.createDataFrame(
-        [(1, "x:y", "a"), (2, "x:y", "b"), (3, "a/b", "c"), (4, None, "d"),
-         (5, "plain", "e"), (6, "a/b", "f")],
-        "k long, p string, v string",
-    )
-    target_path = str(tmp_path / "tgt")
-    target.write.partitionBy("p").parquet(target_path)
-    source = spark.createDataFrame(
-        [(3, "plain", "c"), (5, "plain", "e"), (6, "a/b", "f")],
-        "k long, p string, v string",
-    )
     state = snapshot_state(target, "k", "p")
     assert state.columns == ["k", "row_hash", "p"]
     diff, new_state = sync(source, state, "k")
@@ -248,10 +228,9 @@ def test_merge_spec_parity_with_partition_scoped_rewrite(spark, tmp_path):
     target_path = str(tmp_path / "tgt")
     customer.write.partitionBy("c_nationkey").parquet(target_path)
 
-    diff, _state = sync(source, snapshot_state(customer, "c_custkey"), "c_custkey")
-    diff = diff.join(
-        source.select("c_custkey", "c_nationkey"), "c_custkey", "left"
-    ) if "c_nationkey" not in diff.columns else diff
+    diff, _state = sync(
+        source, snapshot_state(customer, "c_custkey", "c_nationkey"), "c_custkey"
+    )
 
     # (a) partition-scoped rewrite (the shipping fallback)
     apply_changes_to_path(
@@ -434,7 +413,9 @@ def test_partition_scoped_apply_leaves_session_conf_untouched(spark, tmp_path):
     key_conf = "spark.sql.sources.partitionOverwriteMode"
     before = spark.conf.get(key_conf, "static")
     source = changed_customer_source(customer)
-    diff, _state = sync(source, snapshot_state(customer, "c_custkey"), "c_custkey")
+    diff, _state = sync(
+        source, snapshot_state(customer, "c_custkey", "c_nationkey"), "c_custkey"
+    )
     apply_changes_to_path(spark, target_path, diff, "c_custkey", "c_nationkey")
     assert spark.conf.get(key_conf, "static") == before
     got = spark.read.parquet(target_path).select(*source.columns)

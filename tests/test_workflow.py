@@ -324,6 +324,39 @@ def test_incremental_migration_rebuilds_lost_state(spark, tmp_path):
     assert set(again.validation) == {"UNCHANGED"}
 
 
+@pytest.mark.parametrize("lost", ["deleted", "two_column"])
+def test_incremental_migration_rebuilds_state_with_source_types(
+    spark, tmp_path, lost
+):
+    """A state that is missing, or lacks the partition column, is rebuilt
+    from the target read with the source's schema. Read with inferred
+    types, a string partition with digit values (``"01"``) came back as
+    an int: a missing state then classified unchanged rows UPDATED, and a
+    two-column state's round deleted the unchanged row next to an
+    updated one."""
+    import shutil
+
+    schema = "k long, v string, p string"
+    rows = [(1, "a", "01"), (2, "b", "01"), (3, "c", "02"), (4, "d", "10")]
+    first = spark.createDataFrame(rows, schema)
+    out = str(tmp_path / lost)
+    state_path = f"{out}/sync_state_t"
+    incremental_migration(spark, first, "k", "t", out, "p")
+    if lost == "deleted":
+        shutil.rmtree(state_path)
+    else:
+        save_state(snapshot_state(first, "k"), state_path)
+
+    source = spark.createDataFrame([(1, "A", "01"), *rows[1:]], schema)
+    report = incremental_migration(spark, source, "k", "t", out, "p")
+    assert report.validation == {"UPDATED": 1, "UNCHANGED": 3}
+    on_disk = spark.read.schema(schema).parquet(f"{out}/t.parquet")
+    assert report.tables == {"t": 4} == {"t": on_disk.count()}
+    got = on_disk.select(*source.columns)
+    assert got.exceptAll(source).isEmpty()
+    assert source.exceptAll(got).isEmpty()
+
+
 def test_incremental_migration_counts_match_disk_over_rounds(spark, tmp_path):
     """Each round's reported target count is the apply's own count, never
     a read-back: it must equal a fresh on-disk count, and the target must
@@ -441,9 +474,9 @@ def test_incremental_sync_never_reads_untouched_partitions(spark, tmp_path):
 
 def test_incremental_migration_upgrades_two_column_state(spark, tmp_path):
     """A ``(key, row_hash)`` state written by an older round is never
-    misread: its round goes through the target-wide aggregate, leaves
-    the target equal to the source and persists a three-column state,
-    so the next round takes the partition-scoped path."""
+    misread: its round rebuilds the state from the target, leaves the
+    target equal to the source and persists a three-column state, so the
+    next round reuses it within the job ceiling."""
     customer = load_table(spark, SF_DIR_SMOKE, "customer")
     out = str(tmp_path / "legacy")
     target_path = f"{out}/customer.parquet"
