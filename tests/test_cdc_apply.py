@@ -113,15 +113,10 @@ def test_apply_removes_fully_deleted_partition_dir(spark, tmp_path):
     assert _same_rows(result, source)
 
 
-def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
-    """Spark percent-escapes partition values in directory names (``x:y``
-    is stored as ``p=x%3Ay``, ``a/b`` as ``p=a%2Fb``) and writes NULL to
-    the hive default partition. A diff against a ``(key, row_hash,
-    partition)`` state carries each departing key's old partition as
-    ``__old_<p>``; applying it reads only the touched directories, still
-    removes emptied partitions with such names, and returns the count
-    that matches disk. The new state keeps the partition column with the
-    source's values. A diff against a two-column state is refused."""
+def _escaped_partition_case(spark, tmp_path):
+    """A target partitioned on ``p`` with escaped and NULL partition
+    values, and a source that empties ``x:y`` and NULL and moves key 3
+    from ``a/b`` to ``plain`` (so ``a/b`` keeps key 6 only)."""
     target = spark.createDataFrame(
         [(1, "x:y", "a"), (2, "x:y", "b"), (3, "a/b", "c"), (4, None, "d"),
          (5, "plain", "e"), (6, "a/b", "f")],
@@ -129,16 +124,41 @@ def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
     )
     target_path = str(tmp_path / "tgt")
     target.write.partitionBy("p").parquet(target_path)
-    assert {"p=x%3Ay", "p=a%2Fb", "p=__HIVE_DEFAULT_PARTITION__"} <= set(
-        os.listdir(target_path)
-    )
-
-    # x:y and NULL lose every row; key 3 moves from a/b to plain, so a/b
-    # keeps key 6 only
     source = spark.createDataFrame(
         [(3, "plain", "c"), (5, "plain", "e"), (6, "a/b", "f")],
         "k long, p string, v string",
     )
+    return target, target_path, source
+
+
+def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
+    """Spark percent-escapes partition values in directory names (``x:y``
+    is stored as ``p=x%3Ay``, ``a/b`` as ``p=a%2Fb``) and writes NULL to
+    the hive default partition. Emptying such partitions must still
+    remove their directories, and the returned count must match disk."""
+    target, target_path, source = _escaped_partition_case(spark, tmp_path)
+    assert {"p=x%3Ay", "p=a%2Fb", "p=__HIVE_DEFAULT_PARTITION__"} <= set(
+        os.listdir(target_path)
+    )
+
+    diff, _ = sync(source, snapshot_state(target, "k", "p"), "k")
+    n = apply_changes_to_path(spark, target_path, diff, "k", "p")
+
+    assert sorted(d for d in os.listdir(target_path) if d.startswith("p=")) == [
+        "p=a%2Fb", "p=plain",
+    ]
+    result = spark.read.parquet(target_path).select(*source.columns)
+    assert n == result.count() == 3
+    assert _same_rows(result, source)
+
+
+def test_apply_with_partition_carrying_state(spark, tmp_path):
+    """A diff against a ``(key, row_hash, partition)`` state carries each
+    departing key's old partition as ``__old_<p>``, and applying it
+    reproduces the source. The new state keeps the partition column with
+    the source's values. A diff against a two-column state is refused."""
+    target, target_path, source = _escaped_partition_case(spark, tmp_path)
+
     two_column, _ = sync(source, snapshot_state(target, "k"), "k")
     with pytest.raises(ValueError, match="__old_p"):
         apply_changes_to_path(spark, target_path, two_column, "k", "p")
@@ -150,13 +170,8 @@ def test_apply_removes_emptied_partitions_with_escaped_names(spark, tmp_path):
     assert sorted(new_state.select("k", "p").collect()) == sorted(
         source.select("k", "p").collect()
     )
-    n = apply_changes_to_path(spark, target_path, diff, "k", "p")
-
-    assert sorted(d for d in os.listdir(target_path) if d.startswith("p=")) == [
-        "p=a%2Fb", "p=plain",
-    ]
+    apply_changes_to_path(spark, target_path, diff, "k", "p")
     result = spark.read.parquet(target_path).select(*source.columns)
-    assert n == result.count() == 3
     assert _same_rows(result, source)
 
 
