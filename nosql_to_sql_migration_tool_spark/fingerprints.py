@@ -208,7 +208,7 @@ _CONST_TYPES = (
 
 # ---------------------------------------------------------------------------
 # Runtime-state exclusion (ADVICE r8, medium): module-level memo caches
-# (queries._DEDUP_DOCS_CACHE etc.) are dicts, so the r8 constant digest
+# (queries._MEMOS and its locks) are dicts, so the r8 constant digest
 # treated them as constants — populating a cache in a warm process changed
 # plan_hash (populated entries repr SparkSession/DataFrame memory addresses),
 # so pytest ordering that ran a memoized builder before the fingerprint pin
@@ -241,7 +241,7 @@ def runtime_cache(container):
     """Mark a module-level mutable container as runtime state so it never
     enters plan digests. Returns the container for inline use:
 
-        _MY_CACHE: dict[str, tuple] = runtime_cache({})
+        _MEMOS: dict[tuple, tuple] = runtime_cache({})
     """
     _RUNTIME_CACHE_IDS.add(id(container))
     _RUNTIME_CACHE_REFS.append(container)

@@ -140,7 +140,8 @@ def charlm_score(
     and the decomposition put that fold's floor at 1.65 s with a
     constant term (the 256-entry map-literal lookup adding ~0.6 s);
     every JVM restructure measured at the same floor (explode + map
-    2.25 s, explode + broadcast join 2.23 s — tools/ab_charlm_r16.py).
+    2.25 s, explode + broadcast join 2.23 s — OPTIMIZATION_r16.md
+    "charlm_doc_scores").
     Scoring now runs in ``mapInArrow``: text crosses the boundary as
     Arrow batches (only the two needed columns, selected explicitly per
     guide §4.1), the pinned model is a plain Python dict built once per

@@ -286,7 +286,8 @@ def minhash_candidates(
     table is one narrow row per doc (the signature store an LSH
     pipeline persists anyway at scale); an eager ``localCheckpoint``
     computes it once and every consumer reads the checkpoint. Measured
-    (tools/micro_ab_r15.py cands, 3 alternating repeats, sf0.1):
+    (OPTIMIZATION_r15.md "minhash_candidates", 3 alternating repeats,
+    sf0.1):
     2.28 s -> 1.97 s warm, result hash identical.
 
     Caveat (ADVICE r15): the eager checkpoint triggers Spark jobs AT

@@ -108,7 +108,9 @@ def pagerank_sql(
     """DuckDB twin of ``pagerank``: the iteration unrolled into
     ``n_iter`` chained CTEs over a pairs CTE named ``pairs_cte`` —
     identical per-round algebra, so rank drift anywhere in the replay
-    breaks the hash."""
+    breaks the hash. ``__e`` is MATERIALIZED: every round references
+    it (and ``__deg``/``__n`` derive from it), and DuckDB otherwise
+    re-derives the whole pairs CTE once per reference."""
     prev = "__r0"
     iters = []
     for i in range(1, n_iter + 1):
@@ -129,7 +131,7 @@ def pagerank_sql(
         prev = cur
     chain = ",\n".join(iters)
     return f"""
-__e AS (
+__e AS MATERIALIZED (
   SELECT DISTINCT u, v FROM (
     SELECT {src} AS u, {dst} AS v FROM {pairs_cte}
     UNION ALL

@@ -1538,7 +1538,8 @@ def doc_duplication_rate(
     one row per (gram, doc); n_grams = Σ cnt and n_duplicated =
     Σ cnt·[ndocs>1] are the same integers by commutativity, and
     ndocs = count_distinct(id) = rows in the (g, id) group — measured
-    2.00 -> 1.24 s min-of-4 (hash-identical, tools/ab_r16b.py docdup)."""
+    2.00 -> 1.24 s min-of-4 (hash-identical, OPTIMIZATION_r16.md
+    "doc_duplication_rate")."""
     from pyspark.sql import Window
 
     grams = df.select(

@@ -319,7 +319,7 @@ def test_plan_hash_ignores_runtime_cache_state():
     """ADVICE r8 (medium): module-level memo caches are RUNTIME state, not
     plan constants. Populating one in a warm process (xdist ordering, -k
     subsets) must not change plan_hash — previously the digest of e.g.
-    _DEDUP_DOCS_CACHE flipped from md5(\'{}\') cold to excluded-warm, so
+    the dedup-docs memo flipped from md5(\'{}\') cold to excluded-warm, so
     the pin test spuriously failed and a warm refresh_plans() pinned
     irreproducible hashes. Caches are now excluded by identity
     (runtime_cache registration), with recursive purity + empty-container
@@ -332,7 +332,7 @@ def test_plan_hash_ignores_runtime_cache_state():
 
     touched = []
     try:
-        for cache in (q._DEDUP_DOCS_CACHE, q._EMB_PAIRS_CACHE, q._SCRATCH_DIRS):
+        for cache in (q._MEMOS, q._SCRATCH_DIRS):
             before = {n: fp.plan_hash(fn) for n, fn in list(q.QUERIES.items())[:3]}
             cache["__test_key__"] = (Opaque(), Opaque())
             touched.append(cache)

@@ -89,7 +89,7 @@ def test_full_surface_plan_invariants(spark):
         # (outside whole-stage codegen, measured 2.24 s) to one
         # mapInArrow pass over exactly (id, text) with a per-task dict
         # of the 118-entry pinned model (0.47 s, hash-identical; A/B in
-        # tools/ab_charlm_r16.py — every JVM restructure sat at the
+        # OPTIMIZATION_r16.md — every JVM restructure sat at the
         # same interpreted floor). Same deliberate-Arrow class as the
         # decoders: linear, no shuffle before it, columns pruned
         # explicitly.
