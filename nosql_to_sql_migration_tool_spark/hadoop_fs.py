@@ -162,13 +162,14 @@ def run_concurrent(*thunks) -> None:
 
     Thunks must be mutually independent: writes/sweeps of DIFFERENT
     paths with no cross-store ordering requirement. A memo that two
-    thunks share is safe: ``queries._memo`` holds a build-once lock per
-    memo key, so exactly one thunk builds it and the others wait for
-    that entry. Every such action in this repo is an idempotent
-    pure-function write, so a failed thunk re-runs exactly like a
-    crashed sequential step. Each thunk inherits
-    the caller's job group. Exceptions propagate after all thunks settle
-    (first failure re-raised)."""
+    thunks share, or that one thunk reads while another builds it, is
+    safe: ``queries._memo`` builds and computes each memo under a
+    per-key lock, so exactly one thunk computes it and the others wait
+    until its value is computed. Every such action in this repo is an
+    idempotent pure-function write, so a failed thunk re-runs exactly
+    like a crashed sequential step. Each thunk inherits the caller's job
+    group. Exceptions propagate after all thunks settle (first failure
+    re-raised)."""
     from concurrent.futures import ThreadPoolExecutor
 
     if len(thunks) == 1:

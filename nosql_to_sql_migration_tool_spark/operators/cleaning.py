@@ -53,19 +53,6 @@ def strip_html_sql(expr: str) -> str:
     return f"trim(regexp_replace({out}, '\\s+', ' ', 'g'))"
 
 
-def mask_pii(text: Column) -> Column:
-    """Emails -> <EMAIL>, IPv4 -> <IP>, phone-like runs -> <PHONE>."""
-    out = F.regexp_replace(text, EMAIL_RE, "<EMAIL>")
-    out = F.regexp_replace(out, IPV4_RE, "<IP>")
-    return F.regexp_replace(out, PHONE_RE, "<PHONE>")
-
-
-def mask_pii_sql(expr: str) -> str:
-    out = f"regexp_replace({expr}, '{EMAIL_RE}', '<EMAIL>', 'g')"
-    out = f"regexp_replace({out}, '{IPV4_RE}', '<IP>', 'g')"
-    return f"regexp_replace({out}, '{PHONE_RE}', '<PHONE>', 'g')"
-
-
 def with_clean_text(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -210,22 +197,6 @@ def strip_duplicate_lines(
         F.sum((~is_dup).cast("long")).alias("n_kept"),
         F.sum(is_dup.cast("long")).alias("n_removed"),
     )
-
-
-def duplicate_lines_sql(
-    table: str = "documents", min_docs: int = LINE_MIN_DOCS
-) -> str:
-    """DuckDB twin of ``duplicate_lines`` over ``table(doc_id, text)``."""
-    return f"""
-WITH __lines AS (
-  SELECT doc_id, trim(unnest(string_split(text, chr(10)))) AS line
-  FROM {table}
-)
-SELECT line, count(DISTINCT doc_id) AS n_docs,
-       count(*) AS n_occurrences
-FROM __lines WHERE length(line) > 0
-GROUP BY line HAVING count(DISTINCT doc_id) >= {min_docs}
-"""
 
 
 def strip_duplicate_lines_sql(

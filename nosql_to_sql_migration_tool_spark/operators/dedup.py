@@ -167,27 +167,6 @@ def dedup_exact(
 # ---------------------------------------------------------------------------
 
 
-def _perm_hash(i: int):
-    return lambda s: F.md5(F.concat(F.lit(f"{i}|"), s))
-
-
-def _signature_from(shingles: Column) -> Column:
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, _perm_hash(i)))
-            for i in range(N_HASHES)
-        ]
-    )
-
-
-def minhash_signature(text: Column) -> Column:
-    """Array of N_HASHES lexicographic-min md5 values over the shingle
-    set — one independent 'permutation' per salt prefix. (Callers doing
-    repeated work should materialize ``word_shingles`` in a projection
-    first and use ``_signature_from`` — see ``minhash_candidates``.)"""
-    return _signature_from(word_shingles(text))
-
-
 def minhash_signature_sql(text_expr: str) -> str:
     shingles = word_shingles_sql(text_expr)
     mins = ", ".join(
@@ -195,20 +174,6 @@ def minhash_signature_sql(text_expr: str) -> str:
         for i in range(N_HASHES)
     )
     return f"[{mins}]"
-
-
-def band_hashes(signature: Column) -> Column:
-    """N_BANDS band hashes: md5 over each contiguous ROWS_PER_BAND slice."""
-    return F.array(
-        *[
-            F.md5(
-                F.concat_ws(
-                    ",", F.slice(signature, b * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-                )
-            )
-            for b in range(N_BANDS)
-        ]
-    )
 
 
 def band_hashes_sql(sig_expr: str) -> str:
@@ -681,24 +646,6 @@ def _md5_tokens(text: Column) -> Column:
     return F.array_distinct(F.transform(tokens(text), lambda t: F.md5(t)))
 
 
-def _simhash_from(toks: Column) -> Column:
-    n = F.size(toks)
-    bits = [
-        F.when(
-            F.size(F.filter(toks, _bit_vote(j))) * 2 >= n, F.lit("1")
-        ).otherwise(F.lit("0"))
-        for j in range(SIMHASH_BITS)
-    ]
-    return F.concat(*bits)
-
-
-def simhash(text: Column) -> Column:
-    """32-char bit string: per hex position, the majority vote of token
-    md5 digits' parity — Hamming-comparable locality-sensitive signature
-    over the distinct token set."""
-    return _simhash_from(_md5_tokens(text))
-
-
 def with_simhash(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -739,14 +686,6 @@ def simhash_sql(text_expr: str) -> str:
         for j in range(SIMHASH_BITS)
     )
     return bits
-
-
-def hamming(a: Column, b: Column, bits: int = SIMHASH_BITS) -> Column:
-    """Hamming distance between two equal-length bit strings."""
-    pairs = F.arrays_zip(
-        F.split(a, "(?!$)"), F.split(b, "(?!$)")
-    )
-    return F.size(F.filter(pairs, lambda p: p["0"] != p["1"]))
 
 
 def simhash_candidates(

@@ -44,6 +44,7 @@ from pyspark.sql.types import DecimalType
 
 from nosql_to_sql_migration_tool_spark.operators.similarity import (
     _round6,
+    arrow_vector_matrix,
     as_double,
 )
 
@@ -144,21 +145,6 @@ def _sub_l2(sub: Column, center: list[float]) -> Column:
     )
 
 
-def _sub_code(sub: Column, book: list[tuple[int, list[float]]]) -> Column:
-    """Argmin code id for one subvector: sort (rounded distance, cid)
-    structs, take the head — one literal-codebook projection."""
-    structs = F.array(
-        *[
-            F.struct(
-                F.round(_sub_l2(sub, c), 6).alias("d"),
-                F.lit(cid).alias("cid"),
-            )
-            for cid, c in book
-        ]
-    )
-    return F.array_sort(structs)[0]["cid"]
-
-
 def _pq_dists_arrow_fn(
     vec_col: str,
     id_col: str,
@@ -172,7 +158,7 @@ def _pq_dists_arrow_fn(
     ``0.0 + v1`` equals ``v1`` exactly because squares are
     non-negative). Emits the RAW distances; rounding, argmin and the
     min-cid tie-break stay JVM-side so no Python rounding semantics
-    ever enter the result. Loud failures on ragged or null vectors."""
+    ever enter the result. Input vectors pass ``arrow_vector_matrix``."""
     sub_len = len(books[0][0][1])
     m = len(books)
     centers = [
@@ -187,23 +173,10 @@ def _pq_dists_arrow_fn(
         n_out = sum(len(b) for b in centers)
         for b in batches:
             ids = b.column(id_col)
-            vecs = b.column(vec_col)
-            n = len(vecs)
-            if n == 0:
-                yield pa.record_batch(
-                    [ids, pa.array([], type=pa.list_(pa.float64()))],
-                    names=[id_col, "__d"],
-                )
-                continue
-            if vecs.null_count:
-                raise ValueError("pq_encode: null vector")
-            widths = np.diff(vecs.offsets.to_numpy(zero_copy_only=False))
-            if not (widths == m * sub_len).all():
-                raise ValueError("pq_encode: vector dim != m * sub_len")
-            M = np.asarray(vecs.flatten(), dtype=np.float64).reshape(
-                n, m * sub_len
+            M = arrow_vector_matrix(
+                b.column(vec_col), m * sub_len, "pq_encode"
             )
-            out = np.empty((n, n_out), dtype=np.float64)
+            out = np.empty((len(M), n_out), dtype=np.float64)
             col = 0
             for s in range(m):
                 sub = M[:, s * sub_len : (s + 1) * sub_len]

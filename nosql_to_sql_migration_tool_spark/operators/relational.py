@@ -98,13 +98,6 @@ def deterministic_sample(df: DataFrame, key: str, hex_bound: str = "1a") -> Data
     )
 
 
-def random_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """Engine-native Bernoulli sample — fast path when cross-engine
-    reproducibility is not required (per-partition deterministic given
-    the seed, but not comparable to any other engine's sampler)."""
-    return df.sample(fraction=fraction, seed=seed)
-
-
 def new_keys(source: DataFrame, target_keys: DataFrame, key: str) -> DataFrame:
     """Source∖Target anti-semi-join: documents not yet in the target
     (Sync.ps1:147-154, hand-rolled hash-set probe in the reference)."""

@@ -241,10 +241,6 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 
-def _vec_lit(vec: list[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
 def _vec_sql_lit(vec: list[float]) -> str:
     """Literal double array as SQL text. ``repr`` round-trips Python
     floats exactly and Spark's decimal-string->double parse is
@@ -1027,32 +1023,6 @@ def semantic_near_dup_two_level_sql(
     )
 
 
-def semantic_near_dup_multiprobe_sql(
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    n_clusters: int = 8,
-    n_iter: int = 3,
-    n_probe: int = 2,
-    train_limit: int | None = None,
-) -> str:
-    """DuckDB twin of ``semantic_near_dup_multiprobe`` — same unrolled
-    k-means chain, final assignment keeps rank ≤ n_probe clusters per
-    vector, DISTINCT pairs from the shared-block self-join."""
-    score = _kmeans_score_sql("a.v", "a.vn", "b.v", "b.vn")
-    ctes, last = _kmeans_ctes(
-        table, id_col, vec_col, n_clusters, n_iter, train_limit
-    )
-    ctes.append(_kmeans_assign_sql(last, "final", rn_bound=n_probe))
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        f"SELECT DISTINCT a.id AS id_a, b.id AS id_b, {score} AS cos_sim "
-        "FROM final a JOIN final b ON a.cid = b.cid AND a.id < b.id "
-        f"WHERE {score} >= {threshold}"
-    )
-
-
 def semantic_near_dup_sql(
     table: str = "embeddings",
     id_col: str = "vec_id",
@@ -1494,15 +1464,40 @@ __struth AS (
 # ---------------------------------------------------------------------------
 
 
+def arrow_vector_matrix(vecs, dim: int, what: str):
+    """The ``(n, dim)`` float64 matrix of an Arrow ``list<float>`` or
+    ``list<double>`` column — the one input contract of the embedding
+    Arrow kernels (``embedding_band_rows``, ``pq.pq_encode``). A float32
+    element widens to float64 exactly, as the JVM cast does. Raises
+    ``ValueError`` on another element type, a null vector, a null
+    element (NumPy would read it as NaN) or a vector whose length is not
+    ``dim``; the JVM folds these kernels replace would return null or
+    NaN silently, and the corpus contract is fixed-dim non-null."""
+    import numpy as np
+    import pyarrow as pa
+
+    elem = vecs.type.value_type
+    if not (pa.types.is_float32(elem) or pa.types.is_float64(elem)):
+        raise ValueError(f"{what}: vector element type {elem}")
+    if vecs.null_count:
+        raise ValueError(f"{what}: null vector")
+    flat = vecs.flatten()
+    if flat.null_count:
+        raise ValueError(f"{what}: null vector element")
+    widths = np.diff(vecs.offsets.to_numpy(zero_copy_only=False))
+    if not (widths == dim).all():
+        raise ValueError(f"{what}: vector dim != {dim}")
+    return np.asarray(flat, dtype=np.float64).reshape(len(vecs), dim)
+
+
 def _lsh_bits_arrow_fn(vec_col: str, id_col: str):
     """Batch kernel for the hyperplane bit signature (guide §4.2): one
     mapInArrow pass computing every plane's dot as products +
     ``np.add.accumulate`` — a strictly SEQUENTIAL C loop over IEEE
     doubles, so the final prefix value replays the JVM
     ``F.aggregate``-fold's addition order bit-for-bit (verified
-    hash-identical over the full corpus, tools/ab_r16 probe). Loud
-    failures on ragged or null vectors (the JVM fold would null them
-    silently; the corpus contract is fixed-dim non-null)."""
+    hash-identical over the full corpus, tools/ab_r16 probe). Input
+    vectors pass ``arrow_vector_matrix``."""
     planes = hyperplanes()
 
     def fn(batches):
@@ -1512,24 +1507,10 @@ def _lsh_bits_arrow_fn(vec_col: str, id_col: str):
         P = np.array(planes, dtype=np.float64)
         for b in batches:
             ids = b.column(id_col)
-            vecs = b.column(vec_col)
-            n = len(vecs)
-            if n == 0:
-                yield pa.record_batch(
-                    [ids, pa.array([], type=pa.string())],
-                    names=[id_col, "__bits"],
-                )
-                continue
-            if vecs.null_count:
-                raise ValueError("embedding_band_rows: null vector")
-            widths = np.diff(vecs.offsets.to_numpy(zero_copy_only=False))
-            if not (widths == P.shape[1]).all():
-                raise ValueError(
-                    "embedding_band_rows: vector dim != plane dim"
-                )
-            flat = np.asarray(vecs.flatten(), dtype=np.float64)
-            M = flat.reshape(n, P.shape[1])
-            bits = np.empty((n, P.shape[0]), dtype=bool)
+            M = arrow_vector_matrix(
+                b.column(vec_col), P.shape[1], "embedding_band_rows"
+            )
+            bits = np.empty((len(M), P.shape[0]), dtype=bool)
             for j in range(P.shape[0]):
                 # products are exact; accumulate reproduces the
                 # left-fold rounding sequence

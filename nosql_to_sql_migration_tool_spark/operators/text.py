@@ -333,17 +333,6 @@ def bigram_frequencies(
     )
 
 
-def bigram_frequencies_sql(text_expr: str, min_count: int = 1) -> str:
-    toks = _tokens_sql(text_expr)
-    return (
-        "SELECT bigram, count(*) AS cnt FROM ("
-        f"  SELECT unnest(list_transform(generate_series(1, len(t) - 1), "
-        f"i -> array_to_string(list_slice(t, i, i + 1), ' '))) AS bigram "
-        f"FROM (SELECT {toks} AS t FROM documents) WHERE len(t) >= 2"
-        f") GROUP BY bigram HAVING count(*) >= {min_count}"
-    )
-
-
 def assign_training_windows(
     df: DataFrame,
     budget_tokens: int = 256,

@@ -292,18 +292,6 @@ __rates AS (
 )"""
 
 
-def domain_mixture_rates_sql(
-    table: str = "documents",
-    domain_col: str = "lang",
-    budget_frac: float = 0.8,
-) -> str:
-    """DuckDB twin of ``domain_mixture_rates``."""
-    return (
-        f"WITH {_mixture_rates_cte(table, domain_col, budget_frac)}\n"
-        f"SELECT domain AS {domain_col}, n_docs, rate FROM __rates"
-    )
-
-
 def domain_mixture_sample_sql(
     table: str = "documents",
     domain_col: str = "lang",

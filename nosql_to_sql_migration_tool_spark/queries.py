@@ -78,15 +78,20 @@ _MEMO_LOCKS_GUARD = runtime_cache(_threading.Lock())
 
 def _memo(spark: SparkSession, key: tuple, build):
     """The value ``build()`` returned for ``key`` in this session, built
-    once. An entry from another SparkSession is rebuilt. ``build``
-    returns what to keep: a DataFrame memo ``.persist()``s its own frame.
+    and computed once. An entry from another SparkSession is rebuilt.
+    ``build`` returns what to keep: a DataFrame memo ``.persist()``s its
+    own frame, and one ``count()`` under the key's lock fills that cache
+    before the entry is stored.
 
-    ``run_concurrent`` runs build chains on driver threads, so two
-    thunks may ask for the same cold memo (and some builds ``rmtree``
-    and rewrite a shared scratch directory). The per-key lock makes
-    "built by exactly one thunk" a contract: the first caller builds,
-    the rest block and read its entry; distinct keys build
-    concurrently."""
+    ``run_concurrent`` runs the ``build:*`` rows' memos on driver
+    threads, so two thunks may ask for the same cold memo (and some
+    builds ``rmtree`` and rewrite a shared scratch directory). The
+    per-key lock makes "built and computed by exactly one thunk" a
+    contract: the first caller builds, the rest block until its value is
+    computed; distinct keys build concurrently. A build reaches the
+    memos it reads by calling them, so a thunk waits exactly on its
+    dependencies; locks are taken along that acyclic call graph, so
+    they cannot deadlock."""
     entry = _MEMOS.get(key)
     if entry is not None and entry[0] is spark:
         return entry[1]
@@ -95,7 +100,10 @@ def _memo(spark: SparkSession, key: tuple, build):
     with lock:
         entry = _MEMOS.get(key)
         if entry is None or entry[0] is not spark:
-            entry = _MEMOS[key] = (spark, build())
+            value = build()
+            if isinstance(value, DataFrame):
+                value.count()
+            entry = _MEMOS[key] = (spark, value)
         return entry[1]
 
 
@@ -1394,21 +1402,6 @@ def q_events_in_order_windows(spark, sf_dir):
     )
 
 
-# Deliberately NOT registered in QUERIES (VERDICT r4 §next item 3): each
-# engine's HLL sketch differs, so a driver row can only ever record
-# ``err: no_oracle``. The capability is driver-covered by the exact
-# companion ``distinct_users_exact`` below; the sketch's accuracy and
-# partition-merge property are pinned by tests/test_sketches.py.
-def q_approx_distinct_users(spark, sf_dir):
-    """HyperLogLog++ distinct users over events — the combinable-sketch
-    substitute for an exact distinct shuffle at scale."""
-    from nosql_to_sql_migration_tool_spark.operators.sketches import (
-        approx_distinct,
-    )
-
-    return approx_distinct(load_table(spark, sf_dir, "events"), "user_id")
-
-
 @query(
     "distinct_users_exact",
     "SELECT count(DISTINCT user_id) AS n_users FROM events",
@@ -1666,12 +1659,6 @@ def q_ingest_cms_heavy_hitters(spark, sf_dir):
         ).persist()
 
     return _memo(spark, ("ingest_cms", sf_dir), build)
-
-
-from nosql_to_sql_migration_tool_spark.operators.text import (  # noqa: E402
-    bigram_frequencies,
-    bigram_frequencies_sql,
-)
 
 
 # corpus_bigrams was de-registered in r15 (bench-headroom trim, the
@@ -5010,8 +4997,6 @@ from nosql_to_sql_migration_tool_spark.fixtures import (  # noqa: E402
     lined_documents,
 )
 from nosql_to_sql_migration_tool_spark.operators.cleaning import (  # noqa: E402
-    duplicate_lines,
-    duplicate_lines_sql,
     strip_duplicate_lines,
     strip_duplicate_lines_sql,
 )
@@ -5021,8 +5006,7 @@ from nosql_to_sql_migration_tool_spark.operators.cleaning import (  # noqa: E402
 # line_dedup_docs' oracle re-derives the identical duplicate-line
 # detection (same line split, same min_docs threshold) as the filter
 # inside its strip — the standalone boilerplate table was its strict
-# intermediate. duplicate_lines / duplicate_lines_sql and the pytests
-# stay.
+# intermediate. duplicate_lines and its pytests stay.
 
 
 @query(
@@ -5063,8 +5047,6 @@ def q_token_rarity_scores(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 from nosql_to_sql_migration_tool_spark.operators.traindata import (  # noqa: E402
-    domain_mixture_rates,
-    domain_mixture_rates_sql,
     domain_mixture_sample,
     domain_mixture_sample_sql,
 )
@@ -5074,7 +5056,7 @@ from nosql_to_sql_migration_tool_spark.operators.traindata import (  # noqa: E40
 # domain_mixture_sample's oracle embeds the identical rate CTE
 # (_mixture_rates_cte), so every green sample row re-proves the rate
 # table — the standalone rates row was its strict intermediate. The
-# operator, its SQL twin and the pytests stay.
+# operator and its pytests stay.
 
 
 @query(
@@ -5388,9 +5370,9 @@ def q_jaccard_prefix_pairs(spark, sf_dir):
     "minhash_recall_audit",
     f"""
 WITH docs AS ({DUPLICATED_DOCUMENTS_SQL}),
-{_MINHASH_BUCKETS_SQL},
+{_MINHASH_BUCKETS_SQL_MAT},
 sh AS (SELECT doc_id, {word_shingles_sql('text')} AS sh FROM docs),
-ver AS (
+ver AS MATERIALIZED (
   SELECT * FROM (
     SELECT c.id_a, c.id_b,
            round(len(list_intersect(sa.sh, sb.sh)) * 1.0 /
@@ -5400,7 +5382,9 @@ ver AS (
     JOIN sh sb ON c.id_b = sb.doc_id
   ) WHERE jaccard >= 0.6
 ),
-{jaccard_prefix_ctes_sql(3, 5)}
+{jaccard_prefix_ctes_sql(3, 5).replace(
+    "__truth AS (", "__truth AS MATERIALIZED ("
+)}
 SELECT
   (SELECT count(*) FROM __truth) AS n_truth,
   (SELECT count(*) FROM cand) AS n_candidates,
@@ -6440,7 +6424,9 @@ def q_bpe_vocab_tokenize(spark, sf_dir):
 # sides of the comparison. Order matters: each row's cost is incremental
 # over the rows above it (shingles build on the corpus frame, candidate
 # pairs on shingles, ...), which is exactly the artifact DAG a production
-# pipeline would persist stage by stage.
+# pipeline would persist stage by stage. Each row is one
+# ``run_concurrent`` over the memos it warms; the memo calls themselves
+# order the builds (see ``_memo``).
 # ---------------------------------------------------------------------------
 
 PREWARMS: "dict[str, object]" = runtime_cache({})
@@ -6457,11 +6443,6 @@ def _prewarm(name: str):
 from nosql_to_sql_migration_tool_spark.hadoop_fs import run_concurrent  # noqa: E402
 
 
-def _force(df: DataFrame) -> None:
-    """Materialize a persisted memo frame (count touches every row)."""
-    df.count()
-
-
 @_prewarm("build:dedup_text_memos")
 def _pw_dedup_text_memos(spark, sf_dir):
     """The dedup family's shared TEXT-side memos in one row (r10
@@ -6475,62 +6456,24 @@ def _pw_dedup_text_memos(spark, sf_dir):
         with_fingerprints,
     )
 
-    # Each chain starts as soon as its TRUE dependency is met (guide
-    # §2.6): the planted corpus memo is forced first, then the rest of
-    # the pair-graph chain and the simhash and leak chains (all three
-    # read only that memo) run concurrently. The fingerprint chain reads
-    # only the RAW documents table, so it runs beside all of that from
-    # the start. The wall is the longest single chain (docs -> shingles
-    # -> cands -> pairs -> components); `_memo`'s build-once lock keeps
-    # a memo two chains share from being built twice.
-    def _chain_pair_graph():
-        # r13 fold: banded minhash candidates (was
-        # build:minhash_candidates), Jaccard-verified pairs + their
-        # transitive component labels (was build:near_dup_graph). Each
-        # stage is incremental over the one above — sequential WITHIN
-        # itself; this is the row's longest chain.
-        _force(_dedup_shingles(spark, sf_dir))
-        _force(_dedup_cands(spark, sf_dir))
-        _force(_dedup_pairs(spark, sf_dir))
-        _force(_dedup_components(spark, sf_dir))
-
-    def _chain_simhash():
-        # r12 fold: the simhash signature table is a dedup text memo
-        # too (was its own build:simhash_signatures row)
-        _force(_dedup_simhash(spark, sf_dir))
-
-    def _chain_leak():
-        # was build:leak_spans (r13 fold): anchor-blocked train×eval
-        # leak spans — depends only on the planted corpus memo
-        _force(_leak_spans(spark, sf_dir))
-
-    def _chains_on_docs():
-        _force(_dedup_docs(spark, sf_dir))
-        run_concurrent(_chain_pair_graph, _chain_simhash, _chain_leak)
-
-    def _chain_fingerprints():
-        _force(_raw_shingles(spark, sf_dir))
-        with_fingerprints(
+    run_concurrent(
+        lambda: _dedup_docs(spark, sf_dir),
+        lambda: _dedup_shingles(spark, sf_dir),
+        lambda: _dedup_cands(spark, sf_dir),
+        lambda: _dedup_pairs(spark, sf_dir),
+        lambda: _dedup_components(spark, sf_dir),
+        lambda: _dedup_simhash(spark, sf_dir),
+        lambda: _leak_spans(spark, sf_dir),
+        lambda: _raw_shingles(spark, sf_dir),
+        lambda: with_fingerprints(
             load_table(spark, sf_dir, "documents"),
             shingles=_raw_shingles(spark, sf_dir),
-        ).select("doc_id", "exact_fp", "shingle_fp").write.format(
-            "noop"
-        ).mode("overwrite").save()
-
-    run_concurrent(_chains_on_docs, _chain_fingerprints)
-
-
-# build:simhash_signatures folded into build:dedup_text_memos in r12
-# (same dedup-text-memo lineage, the r10 consolidation discipline) to
-# hold bench capacity for the bm25_batch_topk registration.
-# build:minhash_candidates / build:near_dup_graph / build:leak_spans
-# folded the same way in r13 (capacity for the linkage/indexed-phrase/
-# bloom/data-recipe/sketch/entropy registrations).
-
-
-# build:emb_near_dup_pairs folded into build:audit_truths in r14 (bench
-# capacity for the r14 registrations; same embedding-pair lineage — the
-# truth sample and the LSH recall audit both read these memos).
+        )
+        .select("doc_id", "exact_fp", "shingle_fp")
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
 
 
 @_prewarm("build:audit_truths")
@@ -6543,29 +6486,19 @@ def _pw_audit_truths(spark, sf_dir):
     execution. r14 fold: the verified embedding near-dup pair memos
     (was build:emb_near_dup_pairs) join the row — the truth sample and
     the embedding-LSH recall audit both consume them, the same
-    audit-reference lineage."""
-    # r15 optimization (guide §2.6): the five truth artifacts read
-    # disjoint sources (embeddings x2, the dedup memos built by the
-    # previous row, lineitem, orders/events) and share no unbuilt memo —
-    # fully independent chains, overlapped instead of sequential.
-    def _chain_baselines():
-        # r13 fold: the frozen drift baselines (pre-1998 price
-        # histogram, first-half event-type mix — was
-        # build:drift_baseline) are audit reference artifacts of the
-        # same kind: the fixed truth a registered vs-baseline audit row
-        # compares live data against.
-        _orders_price_baseline(spark, sf_dir)
-        _events_type_baseline(spark, sf_dir)
-
+    audit-reference lineage. The frozen drift baselines (pre-1998 price
+    histogram, first-half event-type mix) are the fixed truth a
+    vs-baseline audit row compares live data against."""
     run_concurrent(
-        lambda: _force(_memo_emb_pairs(spark, sf_dir)),
-        lambda: _force(_prefix_truth_pairs(spark, sf_dir)),
-        lambda: _force(_memo_truth_pairs(spark, sf_dir)),
+        lambda: _memo_emb_pairs(spark, sf_dir),
+        lambda: _prefix_truth_pairs(spark, sf_dir),
+        lambda: _memo_truth_pairs(spark, sf_dir),
         lambda: q_price_quantile_error_audit(spark, sf_dir)
         .write.format("noop")
         .mode("overwrite")
         .save(),
-        _chain_baselines,
+        lambda: _orders_price_baseline(spark, sf_dir),
+        lambda: _events_type_baseline(spark, sf_dir),
     )
 
 
@@ -6577,38 +6510,17 @@ def _pw_block_quantizers(spark, sf_dir):
     stage-by-stage DAG a production deployment persists once and every
     IVF/semantic query probes. Round 12 adds the SQ8 quantizer (param
     row + corpus code column) to the same lineage, so the sq8_topk row
-    measures steady-state retrieval, not encoding."""
-    # r15 optimization (guide §2.6): four independent quantizer chains
-    # (raw-corpus centroids; dup-fixture centroids -> both assignment
-    # variants; SQ params -> codes; PQ books -> encode) overlap instead
-    # of running sequentially. Each chain is internally ordered (codes
-    # need params, assignments need centroids); the chains share only
-    # the source tables.
-    def _chain_blocking():
-        k, tl = _blocking_params(_dup_emb_count(spark, sf_dir))
-        _dup_emb_centroids(spark, sf_dir, k, 2, tl)
-        run_concurrent(
-            lambda: _force(_dup_emb_assigned(spark, sf_dir, "flat")),
-            lambda: _force(_dup_emb_assigned(spark, sf_dir, "two_level")),
-        )
-
-    def _chain_sq():
-        _force(_memo_sq_params(spark, sf_dir))
-        _force(_memo_sq_codes(spark, sf_dir))
-
-    def _chain_pq():
-        # r13 fold: the PQ codebooks + one-pass corpus encode to 4-byte
-        # codes (was build:pq_index) are the same artifact class —
-        # trained vector quantizers and their corpus-wide code columns
-        # (plan pinned to read codes only, test_plan_shapes.py).
-        _memo_pq_books(spark, sf_dir)
-        _force(_memo_pq_encoded(spark, sf_dir))
-
+    measures steady-state retrieval, not encoding; the PQ codebooks and
+    their one-pass corpus encode to 4-byte codes are the same artifact
+    class."""
     run_concurrent(
         lambda: _memo_centroids(spark, sf_dir, "raw", 8, 2, 256),
-        _chain_blocking,
-        _chain_sq,
-        _chain_pq,
+        lambda: _dup_emb_assigned(spark, sf_dir, "flat"),
+        lambda: _dup_emb_assigned(spark, sf_dir, "two_level"),
+        lambda: _memo_sq_params(spark, sf_dir),
+        lambda: _memo_sq_codes(spark, sf_dir),
+        lambda: _memo_pq_books(spark, sf_dir),
+        lambda: _memo_pq_encoded(spark, sf_dir),
     )
 
 
@@ -6620,35 +6532,18 @@ def _pw_ingest_state(spark, sf_dir):
     band index, the embedding hyperplane index, the CMS partials store
     (3 batch folds + gated compaction), the post-takedown scratch
     deployment (gate x2 + right-to-be-forgotten sweep) the
-    takedown_audit row reads, and (r12) the inverted-index postings
+    takedown_audit row reads, (r12) the inverted-index postings
     store (two batches + committed compaction) bm25_topk_indexed
-    probes."""
-    # r15 optimization (guide §2.6): five independent store-maintenance
-    # chains overlap. The takedown deployment consumes the corpus band
-    # buckets (so that pair chains), and the RTBF inverted clone copies
-    # the pristine inverted store (chained); everything else shares
-    # only source tables. These chains are dozens-of-tiny-jobs heavy
-    # (gated batches, ledger commits, dynamic overwrites), i.e. mostly
-    # driver-latency-bound — exactly the §2.6 back-fill case.
-    def _chain_takedown():
-        _force(_ingest_corpus_buckets(spark, sf_dir))
-        _takedown_state(spark, sf_dir)
-
-    def _chain_inverted():
-        _inverted_store(spark, sf_dir)
-        # r14 fold (same persisted-store-maintenance lineage): the
-        # cloned post-RTBF inverted deployment bm25_after_takedown
-        # probes.
-        _takedown_inverted_store(spark, sf_dir)
-
+    probes, its cloned post-RTBF deployment bm25_after_takedown probes,
+    and the batch-maintained ER match store update_linkage_matches
+    reads."""
     run_concurrent(
-        _chain_takedown,
-        lambda: _force(_ingest_emb_bands(spark, sf_dir)),
-        lambda: _force(q_ingest_cms_heavy_hitters(spark, sf_dir)),
-        _chain_inverted,
-        # r15 fold (same lineage): the batch-maintained ER match store
-        # (two batch folds + a replayed batch) update_linkage_matches
-        # reads.
+        lambda: _ingest_corpus_buckets(spark, sf_dir),
+        lambda: _takedown_state(spark, sf_dir),
+        lambda: _ingest_emb_bands(spark, sf_dir),
+        lambda: q_ingest_cms_heavy_hitters(spark, sf_dir),
+        lambda: _inverted_store(spark, sf_dir),
+        lambda: _takedown_inverted_store(spark, sf_dir),
         lambda: _linkage_match_store(spark, sf_dir),
     )
 
@@ -6676,11 +6571,6 @@ def _pw_service_boot(spark, sf_dir):
         .mode("overwrite")
         .save(),
     )
-
-
-# build:drift_baseline folded into build:audit_truths and
-# build:pq_index into build:block_quantizers in r13 (same artifact
-# lineages; bench capacity for the r13 registrations).
 
 
 # ---------------------------------------------------------------------------
@@ -7688,10 +7578,6 @@ def q_training_shard_export(spark, sf_dir):
 
 
 # --- round-10 build rows --------------------------------------------------
-
-
-# build:leak_spans folded into build:dedup_text_memos in r13 (same
-# text-dedup artifact DAG; bench capacity for the r13 registrations).
 
 
 @_prewarm("build:training_shards")

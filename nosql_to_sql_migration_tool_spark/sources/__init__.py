@@ -1,8 +1,7 @@
 from nosql_to_sql_migration_tool_spark.sources.registry import (
     TABLES,
     load_table,
-    load_tables,
     register_views,
 )
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table", "register_views"]

@@ -48,7 +48,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from nosql_to_sql_migration_tool_spark.hadoop_fs import try_read_parquet
+from nosql_to_sql_migration_tool_spark.hadoop_fs import (
+    run_concurrent,
+    try_read_parquet,
+)
 
 from nosql_to_sql_migration_tool_spark.operators.dedup import (
     band_bucket_rows,
@@ -104,17 +107,6 @@ def stream_ingest_near_dup(
 
 def _ledger_path(accepted_path: str) -> str:
     return accepted_path.rstrip("/") + ".__ledger"
-
-
-def _concurrent(*thunks) -> None:
-    """Gate/takedown overlap of independent per-batch store actions —
-    ``hadoop_fs.run_concurrent`` with the replay-contract note: callers
-    here only overlap actions with no cross-store ordering requirement;
-    the ledger-first discipline is preserved by sequencing AROUND the
-    overlap (pinned by tests/test_replay_equivalence.py)."""
-    from nosql_to_sql_migration_tool_spark.hadoop_fs import run_concurrent
-
-    run_concurrent(*thunks)
 
 
 def _migrate_legacy_sink(spark: SparkSession, sink_path: str) -> bool:
@@ -419,7 +411,11 @@ def gate_batch(
             batch_shingles=staged["sh"],
         ).localCheckpoint(eager=True)
 
-    _concurrent(
+    # Safe only while _replay_partition returns batch_df and
+    # replayed_ids as EAGER localCheckpoints: a lazy plan over the
+    # ledger would re-list its files inside _stage_and_probe while
+    # _ledger_append overwrites this batch's partition.
+    run_concurrent(
         lambda: _ledger_append(batch_df.select(id_col), ledger, batch_id),
         _stage_and_probe,
     )
@@ -457,7 +453,7 @@ def gate_batch(
             .parquet(index_path)
         )
 
-    _concurrent(
+    run_concurrent(
         _accepted_chain,
         lambda: quarantined.write.mode("append")
         .partitionBy("batch_id")
@@ -533,7 +529,9 @@ def gate_embedding_batch(
             batch_bands=staged["bands"],
         ).localCheckpoint(eager=True)
 
-    _concurrent(
+    # Safe only while batch_df and replayed_ids are eager
+    # localCheckpoints (see the overlap in gate_batch).
+    run_concurrent(
         lambda: _ledger_append(batch_df.select(id_col), ledger, batch_id),
         _stage_and_probe,
     )
@@ -564,7 +562,7 @@ def gate_embedding_batch(
             .parquet(index_path)
         )
 
-    _concurrent(
+    run_concurrent(
         _accepted_chain,
         lambda: quarantined.write.mode("append")
         .partitionBy("batch_id")
@@ -796,7 +794,7 @@ def takedown_docs(
     ]
     if purge_ledger:
         sweeps.append(lambda: _sweep("ledger", ledger))
-    _concurrent(*sweeps)
+    run_concurrent(*sweeps)
     return out
 
 

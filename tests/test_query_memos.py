@@ -164,3 +164,152 @@ def test_cold_path_memo_builds_once_under_concurrent_callers(spark, monkeypatch)
     assert not any(t.is_alive() for t in threads)
     assert len(written) == 1, f"baseline writer ran {len(written)} times"
     assert len(paths) == 4 and len(set(paths)) == 1, paths
+
+
+def _cache_loaded(spark, df) -> bool:
+    """Every partition of ``df``'s cached relation is in the block
+    manager, i.e. the persisted frame has been computed."""
+    cached = (
+        spark._jsparkSession.sharedState()
+        .cacheManager()
+        .lookupCachedData(df._jdf)
+    )
+    return bool(cached.isDefined()) and bool(
+        cached.get()
+        .cachedRepresentation()
+        .cacheBuilder()
+        .isCachedColumnBuffersLoaded()
+    )
+
+
+def test_dataframe_memo_is_computed_when_memo_returns(spark):
+    """`_memo` computes a DataFrame value under the key's lock: the
+    persisted frame is in the cache when the first caller gets it, so
+    a thunk that waits on the lock never recomputes it."""
+    key = ("__test_computed_on_return__",)
+    frame = spark.range(97).selectExpr("id * 7919 AS memo_probe").persist()
+    try:
+        assert q._memo(spark, key, lambda: frame) is frame
+        assert _cache_loaded(spark, frame)
+    finally:
+        q._MEMOS.pop(key, None)
+        frame.unpersist()
+
+
+def test_concurrent_cold_dedup_chain_builds_and_computes_once(
+    spark, monkeypatch
+):
+    """Two threads cold-call `_dedup_pairs` and `_dedup_components` at
+    once. The memo calls alone order the chain docs -> shingles ->
+    cands -> pairs: each is built once, counted once, and cached when
+    both threads return."""
+    import threading
+
+    import nosql_to_sql_migration_tool_spark.operators.dedup as dedup_mod
+
+    sf = SF_DIR_SMOKE
+    names = ("dedup_docs", "dedup_shingles", "dedup_cands", "dedup_pairs")
+    for name in names + ("dedup_components",):
+        entry = q._MEMOS.pop((name, sf), None)
+        if entry is not None:
+            entry[1].unpersist()
+
+    built: dict[str, list] = {n: [] for n in names}
+
+    def recording(name, fn):
+        def wrapped(*a, **k):
+            df = fn(*a, **k)
+            built[name].append(df)
+            return df
+
+        return wrapped
+
+    monkeypatch.setattr(
+        q, "duplicated_documents",
+        recording("dedup_docs", q.duplicated_documents),
+    )
+    monkeypatch.setattr(
+        q, "shingle_sets", recording("dedup_shingles", q.shingle_sets)
+    )
+    monkeypatch.setattr(
+        dedup_mod, "minhash_candidates",
+        recording("dedup_cands", dedup_mod.minhash_candidates),
+    )
+    monkeypatch.setattr(
+        q, "near_dup_pairs", recording("dedup_pairs", q.near_dup_pairs)
+    )
+    frame_cls = type(spark.range(1))
+    counted = []
+    orig_count = frame_cls.count
+
+    def recording_count(self):
+        counted.append(self)
+        return orig_count(self)
+
+    monkeypatch.setattr(frame_cls, "count", recording_count)
+
+    barrier = threading.Barrier(2, timeout=120)
+    errors = []
+
+    def worker(memo):
+        try:
+            barrier.wait()
+            memo(spark, sf)
+        except Exception as exc:  # surfaced by the assertion below
+            errors.append(exc)
+
+    threads = [
+        threading.Thread(target=worker, args=(m,))
+        for m in (q._dedup_pairs, q._dedup_components)
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    for name in names:
+        frame = q._MEMOS[(name, sf)][1]
+        assert len(built[name]) == 1, f"{name} built {len(built[name])}x"
+        # the builder returns the un-persisted frame; the memo keeps
+        # its .persist() result, which is the same object
+        assert built[name][0] is frame, name
+        n = sum(1 for df in counted if df is frame)
+        assert n == 1, f"{name} counted {n}x"
+        assert _cache_loaded(spark, frame), name
+
+
+def test_build_rows_leave_the_same_memo_keys(spark):
+    """Each `build:*` row is one flat `run_concurrent` over its memos;
+    the memos those calls reach are the row's artifact set. Run cold on
+    an empty store, the two rows leave exactly these keys."""
+    sf = SF_DIR_SMOKE
+    saved = dict(q._MEMOS)
+    q._MEMOS.clear()
+    try:
+        q.PREWARMS["build:dedup_text_memos"](spark, sf)
+        text_keys = set(q._MEMOS)
+        q.PREWARMS["build:block_quantizers"](spark, sf)
+        quant_keys = set(q._MEMOS) - text_keys
+    finally:
+        q._MEMOS.clear()
+        q._MEMOS.update(saved)
+    assert text_keys == {
+        (name, sf)
+        for name in (
+            "dedup_docs", "dedup_shingles", "dedup_cands", "dedup_pairs",
+            "dedup_components", "dedup_simhash", "leak_spans",
+            "raw_shingles",
+        )
+    }
+    assert quant_keys == {
+        ("centroids", sf, "dup_fixture", 25, 2, 256),
+        ("centroids", sf, "raw", 8, 2, 256),
+        ("dup_emb_assigned", sf, "flat"),
+        ("dup_emb_assigned", sf, "two_level"),
+        ("dup_emb_count", sf),
+        ("pq_books", sf),
+        ("pq_encoded", sf),
+        ("sq_codes", sf),
+        ("sq_params", sf),
+    }

@@ -374,3 +374,43 @@ def test_hard_negatives_semantics_and_parity(spark):
         map(tuple, hard_negatives(emb, anchors, k=5, n_salts=1).collect())
     )
     assert unsalted == mine
+
+
+def test_arrow_kernels_reject_null_vector_element():
+    """Both embedding Arrow kernels read their input through one
+    contract: a null ELEMENT inside a vector raises instead of entering
+    the distances as NaN, and an empty batch still yields an empty
+    batch."""
+    import pyarrow as pa
+    import pytest
+
+    from nosql_to_sql_migration_tool_spark.operators.pq import (
+        _pq_dists_arrow_fn,
+    )
+    from nosql_to_sql_migration_tool_spark.operators.similarity import (
+        EMBEDDING_DIM,
+        _lsh_bits_arrow_fn,
+    )
+
+    books = [[(0, [0.0] * (EMBEDDING_DIM // 2))]] * 2
+    kernels = {
+        "embedding_band_rows": _lsh_bits_arrow_fn("embedding", "vec_id"),
+        "pq_encode": _pq_dists_arrow_fn("embedding", "vec_id", books),
+    }
+
+    def batch(vecs):
+        return pa.record_batch(
+            [
+                pa.array(range(len(vecs)), type=pa.int64()),
+                pa.array(vecs, type=pa.list_(pa.float32())),
+            ],
+            names=["vec_id", "embedding"],
+        )
+
+    holed = [0.5] * EMBEDDING_DIM
+    holed[7] = None
+    for name, kernel in kernels.items():
+        with pytest.raises(ValueError, match=f"{name}: null vector element"):
+            list(kernel([batch([[0.25] * EMBEDDING_DIM, holed])]))
+        (out,) = list(kernel([batch([])]))
+        assert out.num_rows == 0 and out.column_names[0] == "vec_id"
