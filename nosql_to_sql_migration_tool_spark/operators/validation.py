@@ -2,20 +2,23 @@
 suite (private/Migration_Validation.ps1:1-219) as distributed plans.
 
 The reference validates per sampled document with a point lookup + field
-loop (``Compare-DocumentToRecord``, :266-324). Here the whole sample
-compares in ONE broadcast-friendly left join; per-field diffs come from an
-explode over a (field, source_norm, target_norm) struct array — all
-JVM-side expressions using the shared comparison canon
+loop (``Compare-DocumentToRecord``, :266-324). ``compare_records`` diffs
+whole tables in ONE broadcast-friendly left join; per-field diffs come
+from an explode over a (field, source_norm, target_norm) struct array —
+all JVM-side expressions using the shared comparison canon
 (``Normalize-ValueForComparison`` parity, functions/normalize.py).
 
-At scale: the sample side is tiny (reference default 10 docs) so AQE
-broadcasts it; comparing *full* tables with the same operator is one
-shuffle join with per-field predicates fused into codegen.
+The verdict is bound by driver latency, so it is split by what each side
+needs: ``validation_sample`` collects the normalized last-N source rows
+in one job (it needs only the source, so a migration runs it beside its
+table writes), and ``validation_verdict`` answers the whole target side
+— its row count and the rows of the sampled keys — in one scan, then
+folds the ≤N sample on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Row, functions as F
 
 from nosql_to_sql_migration_tool_spark.functions.normalize import (
     normalize_for_comparison,
@@ -24,37 +27,19 @@ from nosql_to_sql_migration_tool_spark.functions.normalize import (
 MISSING_ROW_FIELD = "_row"
 
 
-def _normalized_join(
-    source: DataFrame,
-    target: DataFrame,
-    key: str,
-    cols: list[str] | None,
-) -> tuple[DataFrame, list[str]]:
-    """``source LEFT JOIN target`` on ``key`` with every compared field
-    normalized to the comparison canon: ``(key, __s_<c>..., __present,
-    __t_<c>...)``, where ``__present`` is NULL for a source row absent
-    from the target. Returns the joined frame and the compared fields."""
-    if cols is None:
-        cols = [c for c in source.columns if c != key and c in target.columns]
-    src_types = {f.name: f.dataType for f in source.schema.fields}
-    tgt_types = {f.name: f.dataType for f in target.schema.fields}
-
-    src = source.select(
+def _normalized(
+    df: DataFrame, key: str, cols: list[str], prefix: str = ""
+) -> DataFrame:
+    """``key`` and each of ``cols`` in the comparison canon, named
+    ``<prefix><col>``."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    return df.select(
         F.col(key),
         *[
-            normalize_for_comparison(F.col(c), src_types[c]).alias(f"__s_{c}")
+            normalize_for_comparison(F.col(c), types[c]).alias(prefix + c)
             for c in cols
         ],
     )
-    tgt = target.select(
-        F.col(key),
-        F.lit(1).alias("__present"),
-        *[
-            normalize_for_comparison(F.col(c), tgt_types[c]).alias(f"__t_{c}")
-            for c in cols
-        ],
-    )
-    return src.join(tgt, key, "left"), cols
 
 
 def compare_records(
@@ -71,7 +56,14 @@ def compare_records(
     Migration_Validation.ps1:119-123) and one ``MISMATCH`` row per
     normalized-unequal field (:301-315). Matching rows emit nothing.
     """
-    joined, cols = _normalized_join(source, target, key, cols)
+    if cols is None:
+        cols = [c for c in source.columns if c != key and c in target.columns]
+    # __present is NULL for a source row absent from the target
+    joined = _normalized(source, key, cols, "__s_").join(
+        _normalized(target, key, cols, "__t_").withColumn("__present", F.lit(1)),
+        key,
+        "left",
+    )
 
     field_structs = F.array(
         *[
@@ -115,12 +107,46 @@ def count_reconcile(source: DataFrame, target: DataFrame) -> DataFrame:
     )
 
 
+def validation_sample(
+    source: DataFrame,
+    key: str,
+    sample_size: int,
+    cols: list[str] | None = None,
+) -> list[Row]:
+    """The last-N sample by key (Get-MdbcData -Last, :104) in one job:
+    rows of ``key`` and each compared field (default: every other source
+    column) in the comparison canon, normalized in the JVM."""
+    if cols is None:
+        cols = [c for c in source.columns if c != key]
+    last_n = source.orderBy(F.col(key).desc()).limit(sample_size)
+    return _normalized(last_n, key, cols).collect()
+
+
+_VERDICT_COUNTS = (
+    "source_count",
+    "target_count",
+    "samples_validated",
+    "samples_passed",
+    "samples_failed",
+    "issues",
+)
+# An inline table is a local relation: collecting the verdict row runs
+# no job.
+_VERDICT_SQL = "VALUES ({}, :status) AS verdict({}, status)".format(
+    ", ".join(f"CAST(:{c} AS BIGINT)" for c in _VERDICT_COUNTS),
+    ", ".join(_VERDICT_COUNTS),
+)
+
+
 def validation_verdict(
     source: DataFrame,
     target: DataFrame,
     key: str,
     sample_size: int = 10,
     cols: list[str] | None = None,
+    *,
+    source_count: int | None = None,
+    sample: list[Row] | None = None,
 ) -> DataFrame:
     """Full validation verdict as one row:
     ``(source_count, target_count, samples_validated, samples_passed,
@@ -132,60 +158,72 @@ def validation_verdict(
     count-mismatch (1 if any) plus one per failed sample, mirroring the
     reference's Issues list length.
 
-    One pass: the ≤N sample left-joins the target once, one aggregate
-    counts the failing sample keys, and that row cross-joins the count
-    reconciliation. ``samples_validated`` is ``min(N, source_count)``,
-    the size of a last-N sample, so the join (which fans out when the
-    target repeats a key) is never counted for it.
+    A caller that already knows ``source_count`` and holds ``sample``
+    (``validation_sample`` over the same ``cols``) pays ONE job: a scan
+    of the target that counts every row (an ``Observation`` below the
+    key filter) and collects the rows of the sampled keys. Either left
+    out costs one more job over the source. A sample key fails when the
+    target has no row for it, or when any field pair of any of its
+    target rows is unequal (a NULL comparison is not a mismatch, as in
+    ``compare_records``); ``samples_failed`` counts DISTINCT failing
+    keys, a NULL key (which matches no target row) once.
+    ``samples_validated`` is ``min(N, source_count)``, the size of a
+    last-N sample, so a target that repeats a key never counts for it.
+    Returns a one-row frame of the driver-side values.
     """
-    sample = source.orderBy(F.col(key).desc()).limit(sample_size)
-    joined, cols = _normalized_join(sample, target, key, cols)
-    # A sample row fails when it is absent from the target or any field
-    # pair compares unequal — exactly the rows ``compare_records`` emits
-    # for (a NULL comparison is not a mismatch, as in its filter).
-    # samples_failed counts DISTINCT failing keys; the struct wrapper
-    # keeps a NULL key countable.
-    failed_row = F.col("__present").isNull()
-    for c in cols:
-        failed_row = failed_row | F.coalesce(
-            F.col(f"__s_{c}") != F.col(f"__t_{c}"), F.lit(False)
+    if cols is None:
+        cols = [c for c in source.columns if c != key and c in target.columns]
+    if source_count is None:
+        source_count = source.count()
+    if sample is None:
+        sample = validation_sample(source, key, sample_size, cols)
+
+    keys = list(dict.fromkeys(r[key] for r in sample if r[key] is not None))
+    if keys:
+        counted = Observation()
+        # the count sits below the key filter, so it sees every target row
+        scan = target.observe(counted, F.count(F.lit(1)).alias("n")).filter(
+            F.col(key).isin(keys)
         )
-    failed = joined.agg(
-        F.count_distinct(F.when(failed_row, F.struct(key))).alias(
-            "samples_failed"
+        hits = _normalized(scan, key, cols).collect()
+        target_count = counted.get["n"]
+    else:
+        # An empty IN list folds the filter away, observation included.
+        hits, target_count = [], target.count()
+
+    by_key: dict = {}
+    for t in hits:
+        by_key.setdefault(t[key], []).append(t)
+
+    def fails(s: Row) -> bool:
+        found = by_key.get(s[key], [])
+        return not found or any(
+            s[c] is not None and t[c] is not None and s[c] != t[c]
+            for t in found
+            for c in cols
         )
-    )
-    base = (
-        count_reconcile(source, target)
-        .crossJoin(failed)
-        # the sample is the last ``sample_size`` rows of ``source``
-        .withColumn(
-            "samples_validated",
-            F.least(F.lit(sample_size), F.col("source_count")).cast("long"),
-        )
-        .withColumn(
-            "samples_passed",
-            F.col("samples_validated") - F.col("samples_failed"),
-        )
-        .withColumn(
-            "issues",
-            F.when(F.col("count_match"), F.lit(0)).otherwise(F.lit(1))
-            + F.col("samples_failed"),
-        )
-    )
-    status = (
-        F.when(F.col("issues") == 0, F.lit("PASSED"))
-        .when(F.col("samples_passed") > F.col("samples_failed"), F.lit("PARTIAL"))
-        .otherwise(F.lit("FAILED"))
-    )
-    return base.select(
-        "source_count",
-        "target_count",
-        "samples_validated",
-        "samples_passed",
-        "samples_failed",
-        "issues",
-        status.alias("status"),
+
+    samples_failed = len({s[key] for s in sample if fails(s)})
+    samples_validated = min(sample_size, source_count)
+    samples_passed = samples_validated - samples_failed
+    issues = int(source_count != target_count) + samples_failed
+    if issues == 0:
+        status = "PASSED"
+    elif samples_passed > samples_failed:
+        status = "PARTIAL"
+    else:
+        status = "FAILED"
+    return target.sparkSession.sql(
+        _VERDICT_SQL,
+        args={
+            "source_count": source_count,
+            "target_count": target_count,
+            "samples_validated": samples_validated,
+            "samples_passed": samples_passed,
+            "samples_failed": samples_failed,
+            "issues": issues,
+            "status": status,
+        },
     )
 
 

@@ -1902,15 +1902,19 @@ def q_exact_dup_groups(spark, sf_dir):
     return exact_dup_groups(docs)
 
 
-_MINHASH_BUCKETS_SQL = f"""
-sig AS (
+# DuckDB evaluates multi-referenced CTEs lazily, so without AS
+# MATERIALIZED the expensive minhash signature expression gets inlined
+# into BOTH sides of the bucket self-join (measured: 36s -> 6s for the
+# component-closure oracle at sf0.01); the hint pins single evaluation.
+_MINHASH_BUCKETS_SQL_MAT = f"""
+sig AS MATERIALIZED (
   SELECT doc_id, {minhash_signature_sql('text')} AS sig FROM docs
 ),
 bands AS (
   SELECT doc_id, generate_subscripts(b, 1) AS band_idx, unnest(b) AS band_hash
   FROM (SELECT doc_id, {band_hashes_sql('sig')} AS b FROM sig)
 ),
-salted AS (
+salted AS MATERIALIZED (
   {salted_buckets_sql('bands', ['band_idx', 'band_hash'], 'doc_id')}
 ),
 cand AS (
@@ -1921,18 +1925,6 @@ cand AS (
    AND a.doc_id < b.doc_id
 )
 """
-
-# DuckDB evaluates multi-referenced CTEs lazily, so the expensive minhash
-# signature expression gets inlined into BOTH sides of the bucket
-# self-join (measured: 36s -> 6s for the component-closure oracle at
-# sf0.01). AS MATERIALIZED pins single evaluation. Applied ONLY to the
-# oracles that were suite-time hotspots (VERDICT r8 next #8) — the text
-# edit requeues a query into the driver rotation, and those are r5-era
-# rows already due this round; the other minhash-family oracles keep the
-# shared un-hinted text so their green rows stay fresh.
-_MINHASH_BUCKETS_SQL_MAT = _MINHASH_BUCKETS_SQL.replace(
-    "sig AS (", "sig AS MATERIALIZED ("
-).replace("salted AS (", "salted AS MATERIALIZED (")
 
 
 # minhash_candidates was de-registered in r14 (bench-headroom trim, the
@@ -1946,7 +1938,7 @@ _MINHASH_BUCKETS_SQL_MAT = _MINHASH_BUCKETS_SQL.replace(
     "near_dup_pairs",
     f"""
 WITH docs AS ({DUPLICATED_DOCUMENTS_SQL}),
-{_MINHASH_BUCKETS_SQL},
+{_MINHASH_BUCKETS_SQL_MAT},
 sh AS (SELECT doc_id, {word_shingles_sql('text')} AS sh FROM docs)
 SELECT * FROM (
   SELECT c.id_a, c.id_b,
@@ -2006,7 +1998,7 @@ def q_dedup_exact_survivors(spark, sf_dir):
     "dedup_near_survivors",
     f"""
 WITH docs AS ({DUPLICATED_DOCUMENTS_SQL}),
-{_MINHASH_BUCKETS_SQL},
+{_MINHASH_BUCKETS_SQL_MAT},
 sh AS (SELECT doc_id, {word_shingles_sql('text')} AS sh FROM docs),
 losers AS (
   SELECT DISTINCT id_b FROM (
@@ -2286,7 +2278,6 @@ from nosql_to_sql_migration_tool_spark.fixtures import (  # noqa: E402
 )
 from nosql_to_sql_migration_tool_spark.operators.similarity import (  # noqa: E402
     cosine_sql,
-    cosine_topk,
     embedding_near_dup,
     lsh_bits_sql,
 )
@@ -3765,7 +3756,7 @@ def q_train_test_split(spark, sf_dir):
     "split_leakage_audit",
     f"""
 WITH docs AS ({DUPLICATED_DOCUMENTS_SQL}),
-{_MINHASH_BUCKETS_SQL},
+{_MINHASH_BUCKETS_SQL_MAT},
 sh AS (SELECT doc_id, {word_shingles_sql('text')} AS sh FROM docs),
 pairs AS (
   SELECT * FROM (
@@ -5141,8 +5132,6 @@ def q_adaptive_quality_filter(spark, sf_dir):
 
 from nosql_to_sql_migration_tool_spark.operators.pq import (  # noqa: E402
     pq_codebooks,
-    pq_topk,
-    pq_topk_sql,
 )
 
 
@@ -7239,7 +7228,7 @@ from nosql_to_sql_migration_tool_spark.operators.graph import (  # noqa: E402
 
 _PAGERANK_ORACLE = f"""
 WITH docs AS ({DUPLICATED_DOCUMENTS_SQL}),
-{_MINHASH_BUCKETS_SQL},
+{_MINHASH_BUCKETS_SQL_MAT},
 sh AS (SELECT doc_id, {word_shingles_sql('text')} AS sh FROM docs),
 pairs AS (
   SELECT id_a, id_b FROM (
@@ -7372,12 +7361,6 @@ def q_scrub_token_spans(spark, sf_dir):
 
 
 # --- linear counting: the oracle-checkable distinct sketch ---------------
-
-from nosql_to_sql_migration_tool_spark.operators.sketches import (  # noqa: E402
-    linear_count,
-    linear_count_sql,
-)
-
 
 # linear_count (the scalar form) was de-registered in r15
 # (bench-headroom trim, funding the KMV registrations on the SAME

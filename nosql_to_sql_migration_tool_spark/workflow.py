@@ -20,11 +20,13 @@ aggregate walks the sample once and also counts the sampled documents
 (an ``Observation`` on the ``limit``, the NOT NULL denominator), then
 ONE write job per table — all tables submitted together through
 ``hadoop_fs.run_concurrent``, each counting its own rows with
-``DataFrame.observe`` so no table is read back to be counted — and
-finally one validation verdict, which reads the main table back from
-disk with its known schema (no footer-schema inference job) and
-compares it in a single sample join + aggregate
-(``operators/validation.py``).
+``DataFrame.observe`` so no table is read back to be counted — and, in
+that same ``run_concurrent``, the last-N validation sample, which needs
+only the source. After the writes commit, ONE scan of the main table
+read back from disk with its known schema (no footer-schema inference
+job) counts it and fetches the sampled keys for the verdict
+(``operators/validation.py``): 8 jobs on the sf0.001 ragged fixture
+(2 inference, 4 writes, 1 sample, 1 target scan).
 
 Job structure of an ``incremental_migration`` sync round, bound by
 driver latency the same way (``operators/cdc.sync_to_path``): the state
@@ -69,6 +71,7 @@ from nosql_to_sql_migration_tool_spark.operators.normalize_docs import (
     normalize_document_table,
 )
 from nosql_to_sql_migration_tool_spark.operators.validation import (
+    validation_sample as last_n_sample,
     validation_verdict,
 )
 from nosql_to_sql_migration_tool_spark.plans.ddl import (
@@ -135,8 +138,10 @@ def full_migration(
        distributed job per table instead of a per-row DML loop), all
        tables written concurrently; ``report.tables`` holds the row
        count each committed write observed
-    6. count/sample validation of the written main table, read back
-       from disk
+    6. count/sample validation: the last-N source sample is collected
+       beside the writes, and the main table's write observation is the
+       source count, so the verdict is one scan of the written main
+       table, read back from disk
     """
     start = time.monotonic()
     report = MigrationReport(table_name, "FullMigration")
@@ -184,19 +189,26 @@ def full_migration(
         )
         for name, df in tables.items()
     ]
+    main = tables[table_name]
+    sample = []
     # Read observations only after every write settled: a failed write
     # re-raises here and never reaches a blocking ``.get``.
-    run_concurrent(*writes)
+    run_concurrent(
+        *writes,
+        lambda: sample.extend(last_n_sample(main, id_col, validation_sample)),
+    )
     report.tables = {name: obs.get["n"] for name, obs in observed.items()}
 
     main_path = os.path.join(output_dir, f"{table_name}.parquet")
-    written_main = spark.read.schema(tables[table_name].schema).parquet(main_path)
+    written_main = spark.read.schema(main.schema).parquet(main_path)
     report.validation = (
         validation_verdict(
-            tables[table_name],
+            main,
             written_main,
             id_col,
             sample_size=validation_sample,
+            source_count=report.tables[table_name],
+            sample=sample,
         )
         .collect()[0]
         .asDict()

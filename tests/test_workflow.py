@@ -25,6 +25,10 @@ from nosql_to_sql_migration_tool_spark.operators.infer import (
     schema_stats,
     spark_schema_from_stats,
 )
+from nosql_to_sql_migration_tool_spark.operators.validation import (
+    validation_sample,
+    validation_verdict,
+)
 from nosql_to_sql_migration_tool_spark.sources.registry import load_table
 from nosql_to_sql_migration_tool_spark.workflow import (
     full_migration,
@@ -209,18 +213,22 @@ def test_full_migration_not_null_counts_every_sampled_doc(spark, tmp_path):
     assert with_null == {**expected, "name": "VARCHAR(255)"}
 
 
-# Jobs of one full_migration of the sf0.001 ragged fixture: one inference
-# job that also counts the sample, four self-counting table writes and the
-# one-pass validation verdict over the main table read with its known
-# schema. Two walks of the inference stream, a separate sample count and
-# an inferring read-back ran 16; the sequential write-then-read-back-count
-# loop and the two-branch verdict ran 31.
-FULL_MIGRATION_JOB_CEILING = 12
+# Jobs of one full_migration of the sf0.001 ragged fixture: two
+# inference jobs (one of them counts the sample), four self-counting
+# table writes with the last-N validation sample collected beside them,
+# and one scan of the main table read back with its known schema that
+# answers the whole target side of the verdict. A verdict that counted
+# and sampled the source again after the writes ran 12; two walks of
+# the inference stream, a separate sample count and an inferring
+# read-back ran 16; the sequential write-then-read-back-count loop and
+# the two-branch verdict ran 31.
+FULL_MIGRATION_JOB_CEILING = 8
 
 
 def test_full_migration_job_ceiling(spark, tmp_path):
-    """Driver-latency guard: concurrent self-counting writes and the
-    one-pass verdict keep one migration to a fixed number of jobs."""
+    """Driver-latency guard: concurrent self-counting writes beside the
+    validation sample, then a one-scan verdict, keep one migration to a
+    fixed number of jobs."""
     docs = ragged_documents(load_table(spark, SF_DIR_SMOKE, "customer"))
 
     def migrate(out):
@@ -235,6 +243,63 @@ def test_full_migration_job_ceiling(spark, tmp_path):
     jobs = len(_settled_job_ids(spark) - before)
     assert report.validation["status"] == "PASSED"
     assert jobs <= FULL_MIGRATION_JOB_CEILING, jobs
+
+
+def test_verdict_with_known_count_and_sample_is_one_job(spark, tmp_path):
+    """Given the source count and the last-N sample, the verdict is one
+    scan of the target on disk, the count included."""
+    customer = load_table(spark, SF_DIR_SMOKE, "customer")
+    path = str(tmp_path / "customer.parquet")
+    customer.write.parquet(path)
+    target = spark.read.schema(customer.schema).parquet(path)
+    n = customer.count()
+    sample = validation_sample(customer, "c_custkey", 10)
+
+    before = _settled_job_ids(spark)
+    row = validation_verdict(
+        customer, target, "c_custkey", source_count=n, sample=sample
+    ).collect()[0]
+    jobs = len(_settled_job_ids(spark) - before)
+    assert row["status"] == "PASSED"
+    assert (row["target_count"], row["samples_validated"]) == (n, 10)
+    assert jobs == 1, jobs
+
+
+def test_full_migration_write_failure_surfaces_after_sample(
+    spark, tmp_path, monkeypatch
+):
+    """A table write that fails re-raises its own error once the sample
+    running beside it has settled; no unfilled write observation is
+    read first."""
+    from pyspark.sql import DataFrameWriter
+
+    from nosql_to_sql_migration_tool_spark import workflow
+
+    class WriteFailed(Exception):
+        pass
+
+    real_parquet = DataFrameWriter.parquet
+    real_sample = workflow.last_n_sample
+    settled = []
+
+    def failing_parquet(self, path, *args, **kwargs):
+        if path.endswith("people_tags.parquet"):
+            raise WriteFailed(path)
+        return real_parquet(self, path, *args, **kwargs)
+
+    def recorded_sample(*args, **kwargs):
+        rows = real_sample(*args, **kwargs)
+        settled.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    monkeypatch.setattr(workflow, "last_n_sample", recorded_sample)
+    docs = ragged_documents(load_table(spark, SF_DIR_SMOKE, "customer"))
+    with pytest.raises(WriteFailed, match="people_tags"):
+        full_migration(
+            spark, docs, "doc", "doc_id", "people", str(tmp_path / "out")
+        )
+    assert settled == [10]
 
 
 def test_run_workflow_multi_collection(spark, tmp_path):
